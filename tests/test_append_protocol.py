@@ -538,9 +538,11 @@ def test_compact_passthrough_is_byte_identical(spark, tmp_path):
 
 def test_batch_search_on_delta_index(spark, tmp_path):
     """The BATCH search path over a delta-bearing termstats table: results
-    equal search_fast (driver df_lookup path), and the plan aggregates the
-    broadcast-JOINED relation, not the full vocabulary (no merge-on-read
-    Aggregate under the join — the O(vocab)-shuffle-per-query trap)."""
+    equal search_fast, and the df lookup both paths share filters the query
+    terms BELOW the merge-on-read aggregate, so no Exchange ever carries
+    the full vocabulary (the O(vocab)-shuffle-per-query trap)."""
+    import re
+
     from text_retrieval_and_search_engines_spark.plans.query import search
 
     cat = _build(spark, tmp_path)
@@ -556,21 +558,16 @@ def test_batch_search_on_delta_index(spark, tmp_path):
     assert [(r["docid"], round(r["score"], 10)) for r in batch] == \
         [(r["docid"], round(r["score"], 10)) for r in fast]
 
-    # plan shape: in the optimized plan of the qt side, the df aggregate
-    # sits ABOVE the broadcast join with the query terms (tiny input), not
-    # below it over the raw termstats scan
-    from pyspark.sql import functions as F2
-    from text_retrieval_and_search_engines_spark.plans.query import (
-        tokenize_queries)
-    qt = (reader.termstats_raw
-          .join(F2.broadcast(tokenize_queries(qdf, reader.analyzer)),
-                "term", "inner")
-          .groupBy("qid", "term", "weight").agg(F2.sum("df").alias("df")))
-    plan = qt._jdf.queryExecution().executedPlan().toString()
-    ji = plan.find("BroadcastHashJoin")
-    ai = plan.find("HashAggregate")
-    assert ji != -1 and ai != -1
-    assert ai < ji      # aggregate prints above (= consumes) the join
+    # plan shape: the `term IN (...)` filter prints below (= feeds) every
+    # HashAggregate and every Exchange of the merge-on-read view
+    lines = (reader.termstats_for(["spark", "index", "data"])
+             ._jdf.queryExecution().executedPlan().toString().splitlines())
+    agg = [i for i, ln in enumerate(lines) if "HashAggregate" in ln]
+    exch = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    filt = [i for i, ln in enumerate(lines)
+            if re.search(r"term#\d+ IN \(", ln)]
+    assert agg and exch and filt, "\n".join(lines)
+    assert max(agg + exch) < min(filt), "\n".join(lines)
 
 
 def test_bucket_selective_compaction(spark, tmp_path):

@@ -8,8 +8,9 @@ import math
 
 import pytest
 
+from text_retrieval_and_search_engines_spark.functions.text import tokenize
 from text_retrieval_and_search_engines_spark.plans.query import (
-    SearchParams, search, search_rm3)
+    SearchParams, search, search_fast, search_rm3)
 from text_retrieval_and_search_engines_spark.sources.pages import synth_queries
 
 QUERIES = None  # filled lazily from fixture vocab
@@ -115,3 +116,58 @@ def test_search_fast_rank_identical(spark, tiny_index):
     # degenerate inputs
     assert search_fast(reader, [("x", "zzznope")]).count() == 0
     assert search_fast(reader, []).count() == 0
+
+
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_duplicate_qid_rows_form_one_query(spark, tiny_index, mode):
+    """Rows sharing a qid form ONE query: two rows of qid "q" that share a
+    term score exactly like their concatenated text — through search,
+    search_fast and the oracle. A repeated (qid, term) must count once, or
+    mode="and" admits docs that lack a query term."""
+    reader, oracle, catalog, en = tiny_index
+    # frequent terms that analyze to themselves, so the intersection of
+    # three of them is non-empty and a shared term is easy to build
+    t0, t1, t2 = [t for t in sorted(oracle.postings,
+                                    key=lambda t: (-oracle.df(t), t))
+                  if tokenize(t) == [t]][:3]
+    q1, q2 = f"{t0} {t1}", f"{t0} {t2}"
+    concat = f"{q1} {q2}"
+    p = SearchParams(k=30, mode=mode)
+    expected = {"q": oracle.search(concat, k=30, mode=mode)}
+    assert expected["q"]
+
+    rows = [("q", q1), ("q", q2)]
+    qdf = spark.createDataFrame(rows, "qid string, text string")
+    runs = {
+        "search": _collect_run(search(reader, qdf, p)),
+        "search_fast": _collect_run(search_fast(reader, rows, p)),
+        "concat": _collect_run(search_fast(reader, [("q", concat)], p)),
+    }
+    for name, got in runs.items():
+        _assert_rank_identical(got, expected, 30)
+        assert got == runs["concat"], name
+
+
+_EMPTY_SCHEMA = "struct<qid:string,docid:bigint,score:double,rank:int>"
+
+
+@pytest.mark.parametrize("text", [None, "", " \t\n ", "the and of"],
+                         ids=["null", "empty", "whitespace", "stopwords"])
+def test_degenerate_query_text(spark, tiny_index, text):
+    """A query whose text is null, empty, whitespace-only or stopword-only
+    returns no rows and leaves the other qids of its batch untouched; an
+    empty query list or DataFrame returns the empty ranked frame."""
+    reader, oracle, catalog, en = tiny_index
+    qpdf, _ = _queries_df(spark, n=2)
+    good = [(row.qid, row.text) for row in qpdf.itertuples()]
+    expected = {qid: oracle.search(qt, k=10) for qid, qt in good}
+    queries = [("n", text)] + good
+    qdf = spark.createDataFrame(queries, "qid string, text string")
+    p = SearchParams(k=10)
+    for df in (search(reader, qdf, p), search_fast(reader, queries, p)):
+        _assert_rank_identical(_collect_run(df), expected, 10)
+
+    empty_df = spark.createDataFrame([], "qid string, text string")
+    for df in (search(reader, empty_df, p), search_fast(reader, [], p)):
+        assert df.schema.simpleString() == _EMPTY_SCHEMA
+        assert df.count() == 0

@@ -48,19 +48,57 @@ def test_bmw_scan_reads_blockmax_columns(spark, reader):
     assert scan and "block_last" in scan[0] and "goff" in scan[0]
 
 
-def test_search_fast_static_bucket_pruning(spark, reader):
-    """Driver-computed bucket list must appear as a partition filter on the
-    postings scan (the Lucene-term-dictionary analogue)."""
-    df = search_fast(reader, [("q", "spark data")], SearchParams(k=5))
-    plan = _plan(df)
+def _assert_bucket_partition_filter(plan: str) -> None:
+    """The scan's PartitionFilters must constrain term_bucket beyond
+    nullness."""
     assert "term_bucket" in plan
-    # the scan's PartitionFilters must constrain term_bucket beyond nullness
     part_lines = [ln for ln in plan.splitlines()
                   if "PartitionFilters" in ln]
     assert part_lines, plan
     assert any(("term_bucket IN" in ln) or ("term_bucket =" in ln)
                or ("term_bucket#" in ln and "IN" in ln)
                for ln in part_lines), "\n".join(part_lines)
+
+
+def test_search_fast_static_bucket_pruning(spark, reader):
+    """Driver-computed bucket list must appear as a partition filter on the
+    postings scan (the Lucene-term-dictionary analogue)."""
+    df = search_fast(reader, [("q", "spark data")], SearchParams(k=5))
+    _assert_bucket_partition_filter(_plan(df))
+
+
+def test_batch_search_static_bucket_pruning(spark, reader):
+    """Batch search takes the same driver-side query path, so it prunes the
+    same term_bucket directories before the scan."""
+    qdf = spark.createDataFrame([("q", "spark data")],
+                                "qid string, text string")
+    _assert_bucket_partition_filter(
+        _plan(search(reader, qdf, SearchParams(k=5))))
+
+
+@pytest.mark.parametrize("algo", ["exact", "bmw"])
+def test_scoring_exchange_is_input_sized(spark, reader, algo):
+    """The scoring exchange carries no explicit partition count, so AQE may
+    size the stage from the bytes it measures."""
+    plan = _plan(search_fast(reader, [("q", "spark data")],
+                             SearchParams(k=5, algo=algo)))
+    assert "REPARTITION_BY_COL" in plan, plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
+def test_search_fast_scoring_stage_coalesced(spark, reader):
+    """After a warm single query collects, its final adaptive plan reads the
+    scoring exchange through a coalesced AQE shuffle read: a few matched
+    rows no longer fan out to spark.sql.shuffle.partitions tasks."""
+    search_fast(reader, [("q", "spark data")], SearchParams(k=5)).collect()
+    df = search_fast(reader, [("q", "spark data")], SearchParams(k=5))
+    df.collect()
+    lines = _plan(df).splitlines()
+    ex = [i for i, ln in enumerate(lines) if "REPARTITION_BY_COL" in ln]
+    assert ex, "\n".join(lines)
+    above = lines[ex[0] - 2:ex[0]]
+    assert "AQEShuffleRead coalesced" in above[0], "\n".join(lines)
+    assert "ShuffleQueryStage" in above[1], "\n".join(lines)
 
 
 def test_query_terms_are_broadcast_side(spark, reader):

@@ -7,11 +7,15 @@ optional RM3 feedback (fb_docs=10, fb_terms=10, original_query_weight=0.5,
 ``src/bm25_retrieval.py:119-123``). Batch search is the native Spark shape
 (the reference fakes it with an 8-thread pool, ``src/bm25_retrieval.py:138-178``).
 
-Plan:
-  queries --Arrow tokenize--> (qid, term, weight)          [tiny]
-         \\--broadcast-join--> termstats (df per term)      [no shuffle]
-  postings --broadcast-join--> matched (qid x term chunks) [no shuffle]
-  matched --groupBy(qid, range_id) Arrow kernel-->         [ONE shuffle]
+Plan (search, search_terms and search_fast share it):
+  queries --collect once, pinned analyzer on the driver--> [search_fast:
+      (qid, term, weight); a repeated (qid, term) summed     no job]
+  terms --reader.df_lookup memo--> df                      [0 jobs warm]
+  qt = local relation (pandas -> Arrow), n_qterms per qid  [no Python]
+  postings --term_bucket IN (driver list)-->               [static pruning]
+         --broadcast-join qt--> matched (qid x term chunks)
+  matched --repartition(qid, range_id) Arrow kernel-->     [ONE shuffle]
+      AQE sizes the scoring stage from the measured shuffle bytes;
       decode chunks, accumulate float64 scores in lexicographic term order
       (pinned summation order = oracle), local top-k
   --window rank (score DESC, docid ASC) <= k-->            [tiny shuffle]
@@ -24,6 +28,7 @@ document-length data (north_star).
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
@@ -32,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import codec
-from ..functions.text import term_freqs, tokenize_series
+from ..functions.text import term_freqs, tokenize, tokenize_series
 from ..sources.tables import Catalog
 
 K1_DEFAULT = 0.9   # reference src/config.py:53-55
@@ -78,9 +83,6 @@ class IndexReader:
         self.postings = catalog.read_table(spark, "postings",
                                            schema=POSTINGS_SCHEMA,
                                            snapshot_done=snap)
-        self.termstats_raw = catalog.read_table(
-            spark, "termstats", schema="term string, df long, cf long",
-            snapshot_done=snap)
         self.termstats_deltas = (catalog.latest_fingerprint("termstats")
                                  or "").startswith("append-delta")
         self.termstats = read_termstats(spark, catalog, snapshot_done=snap)
@@ -109,8 +111,7 @@ class IndexReader:
         if missing:
             if len(self._df_cache) + len(missing) > self._DF_CACHE_MAX:
                 self._df_cache.clear()
-            rows = (self.termstats.filter(F.col("term").isin(missing))
-                    .collect())
+            rows = self.termstats_for(missing).collect()
             found = {r["term"]: int(r["df"]) for r in rows}
             for t in missing:
                 self._df_cache[t] = found.get(t)
@@ -121,6 +122,12 @@ class IndexReader:
                 out[t] = v
         return out
 
+    def termstats_for(self, terms: list[str]) -> DataFrame:
+        """termstats rows of `terms`. The `term IN` filter sits below the
+        merge-on-read aggregate, so a delta-bearing index shuffles only
+        these terms' rows, never the full vocabulary."""
+        return self.termstats.filter(F.col("term").isin(terms))
+
     def cache(self) -> "IndexReader":
         """Pin postings + termstats in executor memory for repeated-query
         workloads (an interactive search service shape). At 10^12-doc scale
@@ -129,16 +136,15 @@ class IndexReader:
         self.termstats = self.termstats.persist()
         self.postings.count()
         self.termstats.count()
-        if getattr(self, "termstats_deltas", False):
-            self.termstats_raw = self.termstats_raw.persist()
-            self.termstats_raw.count()
         return self
 
 
 def tokenize_queries(queries: DataFrame, analyzer: str = "english"
                      ) -> DataFrame:
-    """(qid, text) -> (qid, term, weight=query tf). Same pinned analyzer as
-    indexing (functions/text.py)."""
+    """(qid, text) -> (qid, term, weight=query tf) as a Spark stage, for
+    callers that want the analyzed query relation itself (e.g. to feed
+    search_terms). Same pinned analyzer as indexing (functions/text.py);
+    the search front ends analyze on the driver instead."""
     simple = analyzer == "simple"
 
     def kernel(iterator):
@@ -156,12 +162,12 @@ def tokenize_queries(queries: DataFrame, analyzer: str = "english"
     return queries.mapInPandas(kernel, schema="qid string, term string, weight double")
 
 
-def _score_and_merge(reader: IndexReader, qt: DataFrame,
-                     params: SearchParams,
-                     buckets: list[int] | None = None) -> DataFrame:
-    """Shared tail of every search plan: postings x query-terms broadcast
-    join -> per-(qid, range) Arrow scoring kernel -> global top-k window.
-    `qt` columns: qid, term, weight, df, n_qterms."""
+def _score_and_merge(reader: IndexReader, qt: DataFrame, terms: list[str],
+                     params: SearchParams) -> DataFrame:
+    """Shared tail of every search plan: postings (pruned to the term
+    buckets of `terms`) x query-terms broadcast join -> per-(qid, range)
+    Arrow scoring kernel -> global top-k window. `qt` columns: qid, term,
+    weight, df, n_qterms; `terms` are its distinct terms."""
     n_docs, avgdl = reader.n_docs, reader.avgdl
     range_size = reader.range_size
     k1, b, k, mode = params.k1, params.b, params.k, params.mode
@@ -169,27 +175,15 @@ def _score_and_merge(reader: IndexReader, qt: DataFrame,
     extra = (["block_last", "block_max_tf", "block_min_dl",
               "goff", "toff", "doff"] if params.algo == "bmw" else [])
     postings = reader.postings
-    if buckets is not None:
-        # static partition pruning: only buckets holding this query's terms
+    if reader.n_term_buckets:
+        # static partition pruning: only buckets holding the query terms
+        from .index_build import term_bucket
+        buckets = sorted({term_bucket(t, reader.n_term_buckets)
+                          for t in terms})
         postings = postings.filter(F.col("term_bucket").isin(buckets))
-        join_keys = ["term"]
-        qt_cols = ["qid", "term", "weight", "df", "n_qterms"]
-    elif reader.n_term_buckets:
-        # join on the partition column too -> Spark dynamic partition
-        # pruning skips non-matching term_bucket directories at scan time
-        qt = qt.withColumn(
-            "term_bucket",
-            (F.conv(F.substring(F.md5("term"), 1, 15), 16, 10)
-             .cast("long") % reader.n_term_buckets).cast("int"))
-        join_keys = ["term_bucket", "term"]
-        qt_cols = ["qid", "term", "term_bucket", "weight", "df", "n_qterms"]
-    else:
-        join_keys = ["term"]
-        qt_cols = ["qid", "term", "weight", "df", "n_qterms"]
-    matched = postings.join(
-        F.broadcast(qt.select(*qt_cols)), join_keys, "inner",
-    ).select("qid", "term", "weight", "df", "n_qterms", "range_id",
-             "payload", *extra)
+    matched = postings.join(F.broadcast(qt), "term", "inner").select(
+        "qid", "term", "weight", "df", "n_qterms", "range_id", "payload",
+        *extra)
 
     if params.algo == "bmw":
         from .bmw import bmw_topk_rows
@@ -310,15 +304,7 @@ def _score_and_merge(reader: IndexReader, qt: DataFrame,
                     pa.array(np.concatenate(out_s), type=pa.float64()),
                 ], names=["qid", "docid", "score"])
 
-        n_shuffle = int(matched.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        scored = (matched
-                  .repartition(n_shuffle, "qid", "range_id")
-                  .sortWithinPartitions("qid", "range_id", "term")
-                  .mapInArrow(bmw_kernel_arrow, schema=SCORED_SCHEMA))
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-        return (scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k))
+        return _rank_top_k(matched, bmw_kernel_arrow, k)
 
     # Exhaustive scoring as a mapInArrow group-walk over rows sorted by
     # (qid, range_id, term) — NOT applyInPandas, whose ~10 ms per-group
@@ -443,13 +429,19 @@ def _score_and_merge(reader: IndexReader, qt: DataFrame,
         if out_q:
             yield drain()
 
-    n_shuffle = int(matched.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"))
-    scored = (matched
-              .repartition(n_shuffle, "qid", "range_id")
-              .sortWithinPartitions("qid", "range_id", "term")
-              .mapInArrow(score_kernel_arrow, schema=SCORED_SCHEMA))
+    return _rank_top_k(matched, score_kernel_arrow, k)
 
+
+def _rank_top_k(matched: DataFrame, kernel, k: int) -> DataFrame:
+    """Scoring stage + global merge shared by both kernels. The exchange
+    carries no explicit partition count: AQE coalesces the post-shuffle
+    partitions from the shuffle bytes it measures, so a single query's few
+    matched rows score in one task while a large batch still spreads over
+    the cores."""
+    scored = (matched
+              .repartition("qid", "range_id")
+              .sortWithinPartitions("qid", "range_id", "term")
+              .mapInArrow(kernel, schema=SCORED_SCHEMA))
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -457,72 +449,71 @@ def _score_and_merge(reader: IndexReader, qt: DataFrame,
     )
 
 
+QT_SCHEMA = "qid string, term string, weight double, df long, n_qterms int"
+
+
+def _search_weighted(reader: IndexReader, rows, params: SearchParams
+                     ) -> DataFrame:
+    """The one query path behind search, search_terms and search_fast:
+    (qid, term, weight) rows held on the driver -> ranked results.
+
+    Rows sharing a qid form ONE query: the weights of a repeated
+    (qid, term) are summed into one row, so each term scores and counts
+    towards mode="and" once. df comes from the reader's driver memo (zero
+    Spark jobs when warm); unmatched terms drop out, and n_qterms is each
+    qid's number of distinct matched terms — conjunctive mode needs that
+    GLOBAL count, since a term absent from one docid range still vetoes
+    its docs. The query side reaches the JVM as a local relation (pandas
+    -> Arrow), not a Python RDD."""
+    weights: dict[tuple[str, str], float] = {}
+    for qid, term, w in rows:
+        weights[qid, term] = weights.get((qid, term), 0.0) + w
+    df_map = reader.df_lookup(sorted({t for _, t in weights}))
+    matched = [(q, t, w, df_map[t]) for (q, t), w in weights.items()
+               if t in df_map]
+    if not matched:
+        return _empty_results(reader.spark)
+    n_q = Counter(q for q, _, _, _ in matched)
+    qt = pd.DataFrame([(q, t, w, df, n_q[q]) for q, t, w, df in matched],
+                      columns=["qid", "term", "weight", "df", "n_qterms"])
+    return _score_and_merge(reader,
+                            reader.spark.createDataFrame(qt, QT_SCHEMA),
+                            sorted(set(qt["term"])), params)
+
+
 def search_terms(reader: IndexReader, qterms: DataFrame,
                  params: SearchParams = SearchParams()) -> DataFrame:
     """Weighted-term search: qterms(qid, term, weight) -> (qid, docid, score,
     rank). This is both the BM25 core and the RM3 second pass (weights
-    multiply per-term BM25 contributions, SURVEY R8)."""
-    # df per query term: broadcast the tiny query side; termstats streams.
-    # When append deltas exist, join the RAW delta rows first and aggregate
-    # the tiny joined relation — joining the merge-on-read VIEW would put a
-    # full-vocab shuffle under every cold batch query (Catalyst cannot push
-    # a join below an aggregate).
-    if getattr(reader, "termstats_deltas", False):
-        qt = (reader.termstats_raw.join(F.broadcast(qterms), "term", "inner")
-              .groupBy("qid", "term", "weight")
-              .agg(F.sum("df").alias("df")))
-    else:
-        qt = reader.termstats.join(F.broadcast(qterms), "term", "inner")
-    # per-qid count of index-matched terms (conjunctive mode needs the GLOBAL
-    # count — a term absent from one docid range still vetoes its docs).
-    qt_counts = qt.groupBy("qid").agg(
-        F.countDistinct("term").alias("n_qterms"))
-    qt = qt.join(qt_counts, "qid")
-    return _score_and_merge(reader, qt, params)
+    multiply per-term BM25 contributions, SURVEY R8). The query side is
+    collected once; a null term matches nothing."""
+    rows = (qterms.where(F.col("term").isNotNull())
+            .select(F.col("qid").cast("string"), "term",
+                    F.col("weight").cast("double"))
+            .collect())
+    return _search_weighted(reader, rows, params)
 
 
 def search(reader: IndexReader, queries: DataFrame,
            params: SearchParams = SearchParams()) -> DataFrame:
-    """BM25 top-k over (qid, text) queries — reference R1/R3 batch search."""
-    return search_terms(reader, tokenize_queries(queries, reader.analyzer),
-                        params)
+    """BM25 top-k over (qid, text) queries — reference R1/R3 batch search.
+    The query set is collected once and takes the search_fast path."""
+    rows = queries.select(F.col("qid").cast("string"), "text").collect()
+    return search_fast(reader, rows, params)
 
 
 def search_fast(reader: IndexReader, queries: list[tuple[str, str]],
                 params: SearchParams = SearchParams()) -> DataFrame:
-    """Low-latency path for small query batches: analyze queries DRIVER-side
-    with the same pinned tokenizer, look up term stats with one job, and go
-    straight to the scoring stage (2 jobs total instead of ~4 — the shape of
-    an interactive front-end; the reference's per-call ``searcher.search``
-    is the analogous single-query path, src/bm25_retrieval.py:45-85)."""
-    from ..functions.text import tokenize
-
+    """BM25 top-k over (qid, text) pairs already on the driver: analyze them
+    with the same pinned tokenizer (None = empty text), take df from the
+    reader's memo, and go straight to the scoring job — the shape of an
+    interactive front-end; the reference's per-call ``searcher.search`` is
+    the analogous single-query path, src/bm25_retrieval.py:45-85."""
     simple = reader.analyzer == "simple"
-    rows = []
-    for qid, text in queries:
-        toks = tokenize(text, stem=not simple, stop=not simple)
-        for t, wgt in term_freqs(toks).items():
-            rows.append((qid, t, float(wgt)))
-    if not rows:
-        return _empty_results(reader.spark)
-    terms = sorted({t for _, t, _ in rows})
-    df_map = reader.df_lookup(terms)   # warm repeats: zero Spark jobs
-    n_q = {}
-    for qid, t, _ in rows:
-        if t in df_map:
-            n_q[qid] = n_q.get(qid, 0) + 1
-    qt_rows = [(qid, t, wgt, df_map[t], n_q[qid])
-               for qid, t, wgt in rows if t in df_map]
-    if not qt_rows:
-        return _empty_results(reader.spark)
-    qt = reader.spark.createDataFrame(
-        qt_rows, "qid string, term string, weight double, df long, n_qterms int")
-    buckets = None
-    if reader.n_term_buckets:
-        from .index_build import term_bucket
-        buckets = sorted({term_bucket(t, reader.n_term_buckets)
-                          for _, t, _, _, _ in qt_rows})
-    return _score_and_merge(reader, qt, params, buckets=buckets)
+    rows = [(qid, t, float(w)) for qid, text in queries
+            for t, w in term_freqs(tokenize(text or "", stem=not simple,
+                                            stop=not simple)).items()]
+    return _search_weighted(reader, rows, params)
 
 
 def _empty_results(spark: SparkSession) -> DataFrame:
