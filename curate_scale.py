@@ -2,7 +2,7 @@
 10x-100x the sf0.1 bench corpus (5k docs) with PLANTED duplicate structure,
 and report the stage breakdown the 100 TB story depends on:
 
-    candidates (LSH) -> prefiltered (32-wide estimate) -> verified (exact
+    band collisions (LSH) -> prefiltered (32-wide estimate) -> verified (exact
     Jaccard) -> dropped, plus bucket-cap firing and quality/exact-dup drops.
 
 Input is a deterministic synthetic web corpus (counter-based generator, the
@@ -88,8 +88,8 @@ def main() -> None:
         "wall_sec": round(wall, 1),
         "docs_per_sec": round(n_in / wall, 1),
         "stats": stats,
-        "lsh_candidates": pre("candidates_in"),
-        "prefiltered": pre("candidates_in") - pre("candidates_pruned"),
+        "band_collisions": pre("band_collisions_in"),
+        "prefiltered": pre("band_collisions_in") - pre("candidates_pruned"),
         "verified_pairs": m.get(("curate_minhash_verify", "pairs_verified"),
                                 0),
         "prefilter_bar": pre("min_matches"),

@@ -58,9 +58,9 @@ def test_curate_drops_every_reason_and_records_metrics(spark, planted,
     assert by[("curate", "dropped_near_dup")] == 1
     # the LSH bucket-cap drop report landed too (cap disabled -> zeros)
     assert by[("curate_minhash_lsh", "dropped_rows")] == 0
-    # ...and the estimate-prefilter report (candidates counted, bar +
-    # calibrated loss bound recorded — no silent truncation)
-    assert by[("curate_minhash_prefilter", "candidates_in")] >= \
+    # ...and the estimate-prefilter report (band collisions counted,
+    # bar + calibrated loss bound recorded — no silent truncation)
+    assert by[("curate_minhash_prefilter", "band_collisions_in")] >= \
         by[("curate_minhash_prefilter", "candidates_pruned")]
     assert by[("curate_minhash_prefilter", "min_matches")] == 8  # thr 0.5
     assert 0 < by[("curate_minhash_prefilter", "true_pair_loss_ppm")] <= 2000
@@ -168,11 +168,36 @@ def test_curate_optional_stages_redact_decontam_dupspan(spark, tmp_path):
     assert by[("curate", "dropped_dup_spans")] == 2
 
 
-def test_lsh_prefiltered_pairs_kernel_matches_join(spark, monkeypatch):
-    """r6: the vectorized Arrow pair kernel and the JVM self-join produce
-    the IDENTICAL prefiltered pair set and bucket sizes (the kernel is a
-    pure implementation swap — same band keys, same integer match bar)."""
+def test_curate_by_url_with_non_ascii_ids(spark, tmp_path):
+    """ADVICE high: one non-ASCII url among planted near-dups used to
+    crash the LSH pair kernel, and with it curate-by-url. The drop
+    orientation follows UTF-8 byte order: 'e' < 'é' and 'b' < '中', so
+    the accented and the CJK url are the dropped twins."""
+    rows = [("https://x/é", GOOD),
+            ("https://x/e", GOOD.replace("sun", "suns")),
+            ("https://x/b", GOOD2),
+            ("https://x/中", GOOD2.replace("win", "ages"))]
+    docs = spark.createDataFrame(rows, "url string, text string")
+    curated, stats = curate_corpus(
+        spark, docs, Catalog(str(tmp_path / "ucat")),
+        CurateConfig(min_words=5, max_top_bigram_frac=0.3, jaccard=0.5,
+                     max_bucket=0), id_col="url")
+    urls = sorted(r["url"] for r in curated.select("url").collect())
+    assert urls == ["https://x/b", "https://x/e"]
+    assert stats["dropped_near_dup"] == 2 and stats["rows_out"] == 2
+
+
+def _sig_dict(rows):
+    return {r[0]: list(r[1:]) for r in rows}
+
+
+def test_lsh_prefiltered_pairs_match_reference(spark):
+    """The prefiltered pair set and the cap-surviving bucket sizes equal
+    the pure-Python LSH reference (same band keys, same integer match
+    bar) on clusters whose agreement both passes and fails the bar."""
     import random
+
+    from lsh_reference import lsh_pairs_ref
 
     from text_retrieval_and_search_engines_spark.operators import dedup
 
@@ -198,25 +223,23 @@ def test_lsh_prefiltered_pairs_kernel_matches_join(spark, monkeypatch):
     sigs = spark.createDataFrame(rows, schema)
     bar = dedup.prefilter_min_matches(0.8, width)
 
-    out = {}
-    for impl in ("kernel", "join"):
-        monkeypatch.setattr(dedup, "_PAIR_IMPL", impl)
-        pairs, sizes = dedup.minhash_lsh_prefiltered_pairs(
-            sigs, min_matches=bar)
-        out[impl] = (sorted((r["doc_a"], r["doc_b"])
-                            for r in pairs.collect()),
-                     sorted((r["band_id"], r["band_key"], r["bucket_n"])
-                            for r in sizes.collect()))
-    assert out["kernel"][0] == out["join"][0]
-    assert out["kernel"][1] == out["join"][1]
-    assert len(out["kernel"][0]) >= 20      # the tight clusters survive
+    pairs, sizes = dedup.minhash_lsh_prefiltered_pairs(sigs, min_matches=bar)
+    got = sorted((r["doc_a"], r["doc_b"]) for r in pairs.collect())
+    ref, ref_sizes, _ = lsh_pairs_ref(_sig_dict(rows), bar=bar, width=width,
+                                      max_bucket=dedup.DEFAULT_MAX_BUCKET)
+    assert got == sorted((a, b) for a, b, _ in ref)
+    assert {(r["band_id"], r["band_key"]): r["bucket_n"]
+            for r in sizes.collect()} == ref_sizes
+    assert len(got) >= 20      # the tight clusters survive
 
 
-def test_lsh_prefiltered_pairs_kernel_string_ids(spark, monkeypatch):
-    """String doc ids (the curate-by-url path) go through the kernel's
-    fixed-width-bytes branch; pair set and orientation (a < b in UTF8
-    byte order — orientation picks the DROPPED doc) match the join."""
+def test_lsh_prefiltered_pairs_kernel_string_ids(spark):
+    """String doc ids (the curate-by-url path) travel through the kernel
+    as UTF-8 bytes; pair set and orientation (a < b in UTF-8 byte order —
+    orientation picks the DROPPED doc) equal the reference's."""
     import random
+
+    from lsh_reference import lsh_pairs_ref
 
     from text_retrieval_and_search_engines_spark.operators import dedup
 
@@ -232,23 +255,21 @@ def test_lsh_prefiltered_pairs_kernel_string_ids(spark, monkeypatch):
               + ", ".join(f"mh_{j} long" for j in range(width)))
     sigs = spark.createDataFrame(rows, schema)
     bar = dedup.prefilter_min_matches(0.8, width)
-    out = {}
-    for impl in ("kernel", "join"):
-        monkeypatch.setattr(dedup, "_PAIR_IMPL", impl)
-        pairs, _ = dedup.minhash_lsh_prefiltered_pairs(sigs,
-                                                       min_matches=bar)
-        out[impl] = sorted((r["doc_a"], r["doc_b"])
-                           for r in pairs.collect())
-    assert out["kernel"] == out["join"]
-    assert len(out["kernel"]) == 12
-    assert all(a < b for a, b in out["kernel"])
+    pairs, _ = dedup.minhash_lsh_prefiltered_pairs(sigs, min_matches=bar)
+    got = sorted((r["doc_a"], r["doc_b"]) for r in pairs.collect())
+    ref, _, _ = lsh_pairs_ref(_sig_dict(rows), bar=bar, width=width)
+    assert got == sorted((a, b) for a, b, _ in ref)
+    assert len(got) == 12
+    assert all(a < b for a, b in got)
 
 
-def test_vs_base_kernel_matches_join(spark, monkeypatch):
-    """r6: the two-sided (new x base) pair kernel produces the identical
-    (doc_a, doc_b, est_matches) set as the join shape, string ids
-    included (the append path's url keys)."""
+def test_vs_base_pairs_match_reference(spark):
+    """The two-sided (new x base) pairs equal the reference's
+    (doc_a, doc_b, est_matches) set, with string ids (the append path's
+    url keys)."""
     import random
+
+    from lsh_reference import lsh_pairs_ref
 
     from text_retrieval_and_search_engines_spark.operators import dedup
 
@@ -271,17 +292,17 @@ def test_vs_base_kernel_matches_join(spark, monkeypatch):
                     for _ in range(15)]
     schema = ("doc_id string, "
               + ", ".join(f"mh_{j} long" for j in range(width)))
-    base = spark.createDataFrame(
-        [(f"base{i:05d}", *s) for i, s in enumerate(base_sigs_py)]
-        + sig_rows("basex", 25, []), schema)
-    new = spark.createDataFrame(sig_rows("new", 30, base_sigs_py[:10]),
-                                schema)
+    base_rows = ([(f"base{i:05d}", *s) for i, s in enumerate(base_sigs_py)]
+                 + sig_rows("basex", 25, []))
+    new_rows = sig_rows("new", 30, base_sigs_py[:10])
+    base = spark.createDataFrame(base_rows, schema)
+    new = spark.createDataFrame(new_rows, schema)
     bar = dedup.prefilter_min_matches(0.8, width)
-    out = {}
-    for impl in ("kernel", "join"):
-        monkeypatch.setattr(dedup, "_PAIR_IMPL", impl)
-        df = dedup.minhash_neardup_vs_base(new, base, min_matches=bar)
-        out[impl] = sorted((r["doc_a"], r["doc_b"], r["est_matches"])
-                           for r in df.collect())
-    assert out["kernel"] == out["join"]
-    assert len(out["kernel"]) >= 8       # the planted near-dups matched
+    df = dedup.minhash_neardup_vs_base(new, base, min_matches=bar)
+    got = sorted((r["doc_a"], r["doc_b"], r["est_matches"])
+                 for r in df.collect())
+    ref, _, _ = lsh_pairs_ref(_sig_dict(new_rows), _sig_dict(base_rows),
+                              bar=bar, width=width,
+                              max_bucket=dedup.DEFAULT_MAX_BUCKET)
+    assert got == sorted(ref)
+    assert len(got) >= 8       # the planted near-dups matched

@@ -78,6 +78,22 @@ def test_filter_appended_neardups_flags_base_and_within(spark, base_catalog):
     assert m["dropped_near_base"] == 1 and m["dropped_within_batch"] == 1
 
 
+def test_filter_appended_neardups_non_ascii_urls(spark, base_catalog):
+    """ADVICE high: a non-ASCII url in the batch (here the base near-dup
+    and one within-batch twin) used to crash both pair kernels."""
+    catalog, _ = base_catalog
+    rows = [(u.replace("a0", "é0").replace("a3", "中3"), t)
+            for u, t in _append_batch(spark).collect()]
+    batch = spark.createDataFrame(rows, "url string, text string")
+    kept, stats = curate.filter_appended_neardups(
+        spark, batch, catalog, id_col="url", text_col="text")
+    urls = {r["url"] for r in kept.select("url").collect()}
+    kept.unpersist()
+    assert stats["dropped_near_base"] == 1 and "é0" not in urls
+    # a2 < 中3 in byte order: the CJK twin is the within-batch drop
+    assert stats["dropped_within_batch"] == 1 and urls == {"a1", "a2"}
+
+
 def test_curated_append_is_exactly_once_end_to_end(spark, base_catalog):
     catalog, cfg = base_catalog
     batch = _append_batch(spark)

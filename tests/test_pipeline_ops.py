@@ -529,17 +529,12 @@ def test_ivf_sim_round_pins_ties_to_lowest_centroid(spark):
         assert r["cosine"] == round(r["cosine"], 6)
 
 
-def test_cap_buckets_window_impl_matches_join_and_cuts_exchanges(spark):
-    """The default-on bucket cap must not double the dedup plan: the
-    "window" impl computes bucket sizes with one count-over-window
-    exchange (whose partitioning the band self-join reuses), the legacy
-    "join" impl sizes buckets with a groupBy + semi-join. Results (and
-    drop reports) must be identical. r6 note: the explode-based
-    _band_buckets removed the per-band union that used to duplicate the
-    signature subtree in the JOIN impl, so the two plans are now within
-    a couple of exchanges of each other — the old strictly-smaller
-    assertion is relaxed accordingly (window stays the default for the
-    exchange reuse, which the executed plan confirms at runtime)."""
+def test_cap_buckets_match_reference(spark):
+    """The default-on bucket cap sizes buckets with one count-over-window
+    column; the capped pair set and the drop report equal the
+    pure-Python LSH reference's, with the cap really firing."""
+    from lsh_reference import lsh_pairs_ref
+
     rows = [(i, "dup dup dup common boilerplate text here")
             for i in range(30)]
     rows += [(100 + i, f"unique document number {i} with words {i * 7}")
@@ -547,22 +542,15 @@ def test_cap_buckets_window_impl_matches_join_and_cuts_exchanges(spark):
     d = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = dedup.minhash_signatures(dedup.char_shingles(d)).cache()
     try:
-        res, plans, reports = {}, {}, {}
-        orig = dedup._CAP_IMPL
-        for impl in ("window", "join"):
-            dedup._CAP_IMPL = impl
-            rep: dict = {}
-            df = dedup.minhash_lsh_pairs(sigs, max_bucket=10,
-                                         drop_report=rep)
-            res[impl] = sorted(tuple(r) for r in df.collect())
-            reports[impl] = rep
-            plans[impl] = (df._jdf.queryExecution().executedPlan()
-                           .toString().count("Exchange"))
-        dedup._CAP_IMPL = orig
-        assert res["window"] == res["join"]
-        assert reports["window"] == reports["join"]
-        assert reports["window"]["dropped_rows"] > 0  # cap really fired
-        assert plans["window"] <= plans["join"] + 2
+        rep: dict = {}
+        df = dedup.minhash_lsh_pairs(sigs, max_bucket=10, drop_report=rep)
+        got = sorted(tuple(r) for r in df.collect())
+        ref, _, ref_rep = lsh_pairs_ref(
+            {r["doc_id"]: [r[f"mh_{j}"] for j in range(dedup.MINHASH_N)]
+             for r in sigs.collect()}, max_bucket=10)
+        assert got == sorted((a, b) for a, b, _ in ref)
+        assert rep == ref_rep
+        assert rep["dropped_rows"] > 0  # cap really fired
     finally:
         sigs.unpersist()
 
@@ -671,18 +659,19 @@ def test_sig_prefilter_passes_pairs_with_missing_signatures(spark):
 
 
 def test_cap_bucket_report_shares_the_window_count(spark):
-    """VERDICT r4 item 6: with the window impl, the drop report derives
-    from the SAME count-over-window column the cap filters on — the sized
-    frame is persisted by the report pass, so the downstream self-join
-    reads the cache (InMemoryTableScan) instead of recomputing the
-    bucket subtree."""
+    """VERDICT r4 item 6: the drop report derives from the SAME
+    count-over-window column the cap filters on — the sized frame is
+    persisted by the report pass, so the downstream pair kernel reads the
+    cache (InMemoryTableScan) instead of recomputing the bucket
+    subtree."""
+    from lsh_reference import lsh_pairs_ref
+
     rows = [(i, "mega bucket boilerplate text identical") for i in range(30)]
     rows += [(100 + i, f"unique doc {i} tail {i * 13}") for i in range(5)]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = dedup.minhash_signatures(dedup.char_shingles(d))
     caches: list = []
     rep: dict = {}
-    assert dedup._CAP_IMPL == "window"
     pairs = dedup.minhash_lsh_pairs(sigs, max_bucket=10, drop_report=rep,
                                     cache_registry=caches)
     try:
@@ -690,16 +679,11 @@ def test_cap_bucket_report_shares_the_window_count(spark):
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan
         assert len(caches) == 1 and caches[0].is_cached
-        # report must equal the legacy groupBy-sizes derivation
-        orig = dedup._CAP_IMPL
-        try:
-            dedup._CAP_IMPL = "join"
-            rep2: dict = {}
-            dedup.minhash_lsh_pairs(sigs, max_bucket=10,
-                                    drop_report=rep2).count()
-            assert rep2 == rep
-        finally:
-            dedup._CAP_IMPL = orig
+        # report must equal the reference's bucket-size derivation
+        _, _, ref_rep = lsh_pairs_ref(
+            {r["doc_id"]: [r[f"mh_{j}"] for j in range(dedup.MINHASH_N)]
+             for r in sigs.collect()}, max_bucket=10)
+        assert ref_rep == rep
     finally:
         for c in caches:
             c.unpersist()

@@ -146,3 +146,20 @@ def test_build_postings_single_shuffle(spark, tiny_index):
     assert n_exchange == 1, plan
     assert "term_bucket" in plan and "range_id" in plan
     assert plan.count("MapInArrow") == 2, plan
+
+
+def test_bm25_topk_empty_query_keeps_doc_id_type(spark):
+    """ADVICE: an all-empty query batch used to return doc_id bigint on a
+    string-id corpus while a non-empty batch returns the corpus's own
+    doc_id type; both must carry the corpus type."""
+    from text_retrieval_and_search_engines_spark.plans.bm25_relational import (
+        bm25_topk)
+
+    docs = spark.createDataFrame(
+        [("https://x/é", "spark engines index"), ("u2", "inverted index")],
+        "doc_id string, text string")
+    empty = bm25_topk(docs, [("q1", ""), ("q2", "!!")], k=5)
+    full = bm25_topk(docs, [("q1", "index")], k=5)
+    assert empty.schema.simpleString() == full.schema.simpleString()
+    assert empty.schema["doc_id"].dataType.simpleString() == "string"
+    assert empty.count() == 0

@@ -238,7 +238,7 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, catalog,
             bar = dedup.prefilter_min_matches(
                 cfg.jaccard, dedup.PREFILTER_N, cfg.prefilter_max_loss)
             # r6 (VERDICT r5 item 1): banded LSH with the estimate
-            # prefilter applied INLINE in the bucket self-join — the
+            # prefilter applied INLINE in the bucket walk — the
             # collision volume (139.5M pairs at sf1.0, 2,800/doc) no
             # longer transits ANY exchange; only band rows and the
             # prefilter survivors move. Provably the same surviving pair
@@ -259,9 +259,10 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, catalog,
             # cap-surviving bucket sizes as sum n*(n-1)/2 — never
             # materialized), the calibrated loss bound AND the
             # exact-verified pair count land in the metrics table.
-            # `candidates_in` now counts band collisions (pre-distinct);
-            # the old distinct-candidate count would itself cost the
-            # O(candidates) exchange this change removes.
+            # `band_collisions_in` counts band collisions (pre-distinct,
+            # a pair once per shared band); a distinct-candidate count
+            # would itself cost the O(candidates) exchange the pair kernel
+            # avoids.
             n_cand = int(bucket_sizes.agg(F.coalesce(
                 F.sum(F.col("bucket_n") * (F.col("bucket_n") - 1)),
                 F.lit(0)).alias("c")).collect()[0]["c"] // 2)
@@ -277,7 +278,8 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, catalog,
             _pt("exact_verify")
             catalog.write_table(
                 spark.createDataFrame(
-                    [("curate_minhash_prefilter", "candidates_in", n_cand),
+                    [("curate_minhash_prefilter", "band_collisions_in",
+                      n_cand),
                      ("curate_minhash_prefilter", "candidates_pruned",
                       n_cand - n_pref),
                      ("curate_minhash_prefilter", "min_matches", bar),

@@ -2,9 +2,11 @@
 
 Beyond the reference's own operator set (it deduplicates nothing — robust04 is
 pre-cleaned), a 100 TB web-corpus engine needs dedup as a first-class stage.
-All hot paths are JVM-side column expressions (whole-stage codegen; no Python
-per row). The hash family is md5-based so every operator has an exact ANSI-SQL
-twin for the DuckDB oracle gate:
+Shingles, signatures and band keys are JVM-side column expressions
+(whole-stage codegen; no Python per row); the LSH pair walk is a vectorized
+numpy kernel over Arrow batches (per bucket, not per row). The hash family
+is md5-based so every operator has an exact ANSI-SQL twin for the DuckDB
+oracle gate:
 
     h_seed(x) = int64(first 15 hex digits of md5(seed || x))   # 60 bits
 
@@ -12,14 +14,20 @@ Operators:
 * exact_dedup          — hash-groupBy on normalized text
 * char_shingles        — distinct char k-shingles per doc (explode, JVM-side)
 * minhash_signatures   — k minhashes per doc (k min-aggregates over shingles)
-* minhash_lsh_pairs    — banded LSH candidate pairs + exact Jaccard verify
+* minhash_lsh_pairs    — banded LSH candidate pairs (every bucket collision)
+* minhash_lsh_prefiltered_pairs — LSH pairs passing a signature-match bar
+* minhash_neardup_vs_base — the same, between a new batch and a base table
 * ngram_jaccard_pairs  — exact shingle-Jaccard for candidate pairs
 * simhash              — 32-bit simhash fingerprint (tf-weighted bit votes)
 * simhash_neardup      — pairs within a Hamming radius (bucketed by bands)
 
 Scale notes: shingle explode is map-side; the only shuffles are the per-doc
-min-aggregate (combines map-side) and the band-bucket self-join (bounded by
-bucket size; salted by band_id). Jaccard verify joins only candidate pairs.
+min-aggregate (combines map-side) and the band rows' bucket exchange. All
+three MinHash pair operators are one Arrow bucket-walk kernel
+(`_bucket_pairs`): pairs are generated, match-counted and bar-filtered
+inside each bucket, so the O(collisions) volume never crosses an exchange
+(only the O(n x bands) band rows and the surviving pairs move). Jaccard
+verify joins only candidate pairs.
 """
 
 from __future__ import annotations
@@ -103,78 +111,44 @@ def minhash_signatures(shingles: DataFrame, n_hashes: int = MINHASH_N
     return shingles.groupBy("doc_id").agg(*aggs)
 
 
-import os as _os
-
-# Bucket-cap implementation A/B dial (same precedent as
-# $SPARK_GRAFT_TOKENIZER): "window" computes bucket sizes with ONE
-# count-over-window exchange whose hash partitioning the downstream
-# band-bucket self-join then reuses (ReusedExchange — the cap adds zero
-# net shuffles); "join" is the previous groupBy-sizes + left-semi shape
-# (two extra exchanges + a recompute of the bucket subtree), kept for
-# interleaved A/B measurement on this noise-prone VM.
-_CAP_IMPL = _os.environ.get("SPARK_GRAFT_CAP_IMPL", "window")
-
-# minhash_lsh_prefiltered_pairs implementation dial (same A/B precedent):
-# "kernel" generates+prunes within-bucket candidate pairs in a vectorized
-# numpy Arrow kernel (memory-bound integer compares); "join" is the pure
-# JVM self-join shape (kept for A/B and for non-numeric doc ids, where
-# the kernel falls back to it automatically).
-_PAIR_IMPL = _os.environ.get("SPARK_GRAFT_LSH_PAIR_IMPL", "kernel")
-
-
 def _cap_buckets(buckets: DataFrame, keys: list[str], max_bucket: int,
                  drop_report: dict | None = None,
                  cache_registry: list | None = None) -> DataFrame:
     """Drop band buckets larger than `max_bucket` members: a degenerate
-    bucket (boilerplate / empty docs) makes the self-join quadratic WITHIN
-    the bucket at web scale. Oversized buckets are near-useless for near-dup
-    anyway (everything matches everything); exact-dedup catches the
-    byte-identical core. Off when max_bucket <= 0.
+    bucket (boilerplate / empty docs) makes pair generation quadratic
+    WITHIN the bucket at web scale. Oversized buckets are near-useless for
+    near-dup anyway (everything matches everything); exact-dedup catches
+    the byte-identical core. Off when max_bucket <= 0.
 
-    When `drop_report` is given, the dropped volume is COUNTED and surfaced:
-    silent truncation reads as full coverage when it is not. In the window
-    impl the report is derived from the SAME count-over-window column the
-    cap filters on (VERDICT r4 item 6: the old shape ran a separate
-    groupBy-sizes aggregate, recomputing the bucket subtree): the sized
-    frame is persisted, the report aggregate materializes it, and the
-    downstream self-join reads the cache — the bucket subtree and the
-    window exchange run ONCE total. The cache is released via
-    `cache_registry` when the caller provides one (the curate DAG does);
-    direct callers fall back to Spark's LRU eviction."""
+    Bucket sizes come from ONE count-over-window column. When
+    `drop_report` is given, the dropped volume is COUNTED and surfaced
+    (silent truncation reads as full coverage when it is not), derived
+    from that SAME column: the sized frame is persisted, the report
+    aggregate materializes it, and the downstream pair stage reads the
+    cache — the bucket subtree and the window exchange run ONCE total.
+    The cache is released via `cache_registry` when the caller provides
+    one (the curate DAG does); direct callers fall back to Spark's LRU
+    eviction."""
     if max_bucket <= 0:
         if drop_report is not None:
             drop_report.update(dropped_buckets=0, dropped_rows=0,
                                max_bucket=0)
         return buckets
-    if _CAP_IMPL == "window":
-        from pyspark.sql import Window
-        w = Window.partitionBy(*keys)
-        sized = buckets.withColumn("_bn", F.count("*").over(w))
-        if drop_report is not None:
-            sized = sized.persist()
-            if cache_registry is not None:
-                cache_registry.append(sized)
-            over = (sized.filter(F.col("_bn") > max_bucket)
-                    .agg(F.count_distinct(*[F.col(k) for k in keys])
-                         .alias("b"),
-                         F.count("*").alias("r"))
-                    .collect()[0])
-            drop_report.update(dropped_buckets=int(over["b"]),
-                               dropped_rows=int(over["r"]),
-                               max_bucket=max_bucket)
-        return sized.filter(F.col("_bn") <= max_bucket).drop("_bn")
+    from pyspark.sql import Window
+    sized = buckets.withColumn("_bn", F.count("*").over(
+        Window.partitionBy(*keys)))
     if drop_report is not None:
-        over = (buckets.groupBy(*keys).count()
-                .filter(F.col("count") > max_bucket)
-                .agg(F.count("*").alias("b"),
-                     F.coalesce(F.sum("count"), F.lit(0)).alias("r"))
+        sized = sized.persist()
+        if cache_registry is not None:
+            cache_registry.append(sized)
+        over = (sized.filter(F.col("_bn") > max_bucket)
+                .agg(F.count_distinct(*[F.col(k) for k in keys]).alias("b"),
+                     F.count("*").alias("r"))
                 .collect()[0])
         drop_report.update(dropped_buckets=int(over["b"]),
                            dropped_rows=int(over["r"]),
                            max_bucket=max_bucket)
-    sizes = buckets.groupBy(*keys).count()
-    ok = sizes.filter(F.col("count") <= max_bucket).drop("count")
-    return buckets.join(ok, keys, "left_semi")
+    return sized.filter(F.col("_bn") <= max_bucket).drop("_bn")
 
 
 def record_drop_report(spark: SparkSession, catalog, report: dict,
@@ -218,10 +192,12 @@ def simhash_neardup_with_metrics(spark: SparkSession, catalog,
     return pairs
 
 
-def _band_buckets(signatures: DataFrame, n_hashes: int,
-                  bands: int) -> DataFrame:
-    """(doc_id, band_id, band_key) rows: one md5 band key per signature
-    band — the shared bucket-building step of banded LSH.
+def _band_rows(signatures: DataFrame, n_hashes: int, bands: int,
+               width: int = 0) -> DataFrame:
+    """(doc_id, mh_0..mh_{width-1}, band_id, band_key) rows: one md5 band
+    key over each band of the first `n_hashes` signature components, with
+    the first `width` components carried for the pair kernel's match
+    count (0 carries none: every collision is a pair).
 
     r6: one EXPLODE over an inline (band_id, band_key) struct array
     instead of a `bands`-way union — the union duplicated the whole
@@ -236,10 +212,152 @@ def _band_buckets(signatures: DataFrame, n_hashes: int,
         entries.append(F.struct(
             F.lit(b).alias("band_id"),
             F.md5(F.concat_ws("|", *cols)).alias("band_key")))
+    carry = ["doc_id", *[f"mh_{j}" for j in range(width)]]
     return (signatures
-            .select("doc_id", F.explode(F.array(*entries)).alias("_b"))
-            .select("doc_id", F.col("_b.band_id").alias("band_id"),
-                    F.col("_b.band_key").alias("band_key")))
+            .select(*carry, F.explode(F.array(*entries)).alias("_b"))
+            .select(*carry, "_b.band_id", "_b.band_key"))
+
+
+def _id_wire_type(*id_types) -> str:
+    """How doc ids travel through the pair kernel: int/long ids as
+    ``long``, string ids as their UTF-8 bytes (``binary``; byte order is
+    Spark's UTF8String order, so ``a < b`` orients pairs exactly as a
+    Spark comparison would). Anything else — or string ids on one side
+    and integral on the other — has no shared order and raises."""
+    from pyspark.sql import types as T
+    wires = {"long" if isinstance(t, (T.IntegerType, T.LongType))
+             else "binary" if isinstance(t, T.StringType) else None
+             for t in id_types}
+    if None in wires or len(wires) != 1:
+        raise TypeError("LSH pair doc ids must be all string or all "
+                        "int/long, got "
+                        + " and ".join(t.simpleString() for t in id_types))
+    return wires.pop()
+
+
+def _bucket_pairs(new_rows: DataFrame, base_rows: DataFrame | None,
+                  bar: int, width: int) -> DataFrame:
+    """The one banded-LSH pair kernel: every MinHash near-dup pair path
+    (all-collision pairs, the curate prefilter, the new x base append
+    join) is this walk over `_band_rows` frames.
+
+    Self mode (`base_rows` None): pairs within `new_rows`, ``a < b``.
+    Cross mode: `new_rows` x `base_rows`, dropping ``a == b``. A pair is
+    kept when its first `width` signature components agree in >= `bar`
+    places (bar 0 keeps every collision). Band rows are hash-partitioned
+    and sorted by bucket — the partitioning the cap's window already
+    has — and a mapInArrow walk builds each bucket's (n, width) int64
+    matrix and counts pairwise matches with one vectorized compare per
+    row block, so the collision volume is generated, counted and
+    bar-filtered in place and never crosses an exchange.
+
+    Returns the RAW (doc_a, doc_b, est_matches) rows — one per shared
+    band, so callers distinct — with each id column back in its side's
+    input type."""
+    id_types = [new_rows.schema["doc_id"].dataType]
+    if base_rows is not None:
+        id_types.append(base_rows.schema["doc_id"].dataType)
+    wire = _id_wire_type(*id_types)
+    sig = ([F.array(*[f"mh_{j}" for j in range(width)]).alias("sig")]
+           if width else [])
+    sides = [new_rows] if base_rows is None else [new_rows, base_rows]
+    # a null id pairs with nothing, as in an equi-join
+    packed = reduce(DataFrame.unionByName, [
+        rows.select("band_id", "band_key", F.lit(side).alias("side"),
+                    F.col("doc_id").cast(wire).alias("doc_id"), *sig)
+        .filter(F.col("doc_id").isNotNull())
+        for side, rows in enumerate(sides)])
+    n_shuffle = int(new_rows.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions"))
+    parted = (packed.repartition(n_shuffle, "band_id", "band_key")
+              .sortWithinPartitions("band_id", "band_key"))
+    cross = base_rows is not None
+    binary_ids = wire == "binary"
+
+    def kernel(batches):
+        import pyarrow as pa
+        bucket: list = []      # (ids, sides, sigs) slices of the open bucket
+        out: list = []         # (a, b, matches) survivor chunks
+        n_out = 0
+        cur = None
+
+        def drain():
+            nonlocal n_out
+            a, b, m = (np.concatenate(c) for c in zip(*out))
+            out.clear()
+            n_out = 0
+            id_type = pa.binary() if binary_ids else pa.int64()
+            return pa.RecordBatch.from_arrays(
+                [pa.array(a, id_type), pa.array(b, id_type),
+                 pa.array(m.astype(np.int32), pa.int32())],
+                names=["doc_a", "doc_b", "est_matches"])
+
+        def flush():
+            nonlocal n_out
+            ids, sides_, sigs = (np.concatenate(c) for c in zip(*bucket))
+            bucket.clear()
+            if ids.size < 2:     # most buckets: no pair, skip the compare
+                return
+            if cross:
+                new = sides_ == 0
+                a_ids, a_sigs = ids[new], sigs[new]
+                b_ids, b_sigs = ids[~new], sigs[~new]
+            else:
+                a_ids, a_sigs = b_ids, b_sigs = ids, sigs
+            # the row block bounds the (blk x nb x width) bool compare to
+            # ~64 MB even at a 10k-member bucket
+            blk = max(1, 2_000_000 // max(b_ids.size, 1))
+            for i0 in range(0, a_ids.size, blk):
+                eq = (a_sigs[i0:i0 + blk, None, :]
+                      == b_sigs[None, :, :]).sum(axis=2)
+                ia, ib = np.nonzero(eq >= bar)
+                pa_ids, pb_ids = a_ids[i0 + ia], b_ids[ib]
+                keep = pa_ids != pb_ids if cross else pa_ids < pb_ids
+                if keep.any():
+                    out.append((pa_ids[keep], pb_ids[keep],
+                                eq[ia, ib][keep]))
+                    n_out += int(keep.sum())
+                    if n_out >= 1_000_000:
+                        yield drain()
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            bids = batch.column("band_id").to_numpy(zero_copy_only=False)
+            bkeys = batch.column("band_key").to_numpy(zero_copy_only=False)
+            sides_b = batch.column("side").to_numpy(zero_copy_only=False)
+            if binary_ids:
+                ids = np.array(batch.column("doc_id").to_pylist(),
+                               dtype=object)
+            else:
+                ids = batch.column("doc_id").to_numpy(
+                    zero_copy_only=False).astype(np.int64)
+            if width:
+                sigs = (batch.column("sig").flatten()
+                        .to_numpy(zero_copy_only=False).astype(np.int64)
+                        .reshape(-1, width))
+            else:
+                sigs = np.empty((n, 0), np.int64)
+            change = np.flatnonzero(
+                (bids[1:] != bids[:-1]) | (bkeys[1:] != bkeys[:-1])) + 1
+            bounds = np.concatenate(([0], change, [n]))
+            for lo, hi in zip(bounds[:-1], bounds[1:]):
+                key = (bids[lo], bkeys[lo])
+                if cur is not None and cur != key:
+                    yield from flush()
+                cur = key
+                bucket.append((ids[lo:hi], sides_b[lo:hi], sigs[lo:hi]))
+        if bucket:
+            yield from flush()
+        if out:
+            yield drain()
+
+    raw = parted.mapInArrow(
+        kernel, schema=f"doc_a {wire}, doc_b {wire}, est_matches int")
+    return raw.select(F.col("doc_a").cast(id_types[0]).alias("doc_a"),
+                      F.col("doc_b").cast(id_types[-1]).alias("doc_b"),
+                      "est_matches")
 
 
 def minhash_lsh_pairs(signatures: DataFrame, n_hashes: int = MINHASH_N,
@@ -247,22 +365,18 @@ def minhash_lsh_pairs(signatures: DataFrame, n_hashes: int = MINHASH_N,
                       max_bucket: int = DEFAULT_MAX_BUCKET,
                       drop_report: dict | None = None,
                       cache_registry: list | None = None) -> DataFrame:
-    """Banded LSH: docs sharing any band bucket -> candidate pairs (a < b).
-    `max_bucket` caps bucket cardinality (see _cap_buckets; defaults to the
-    scale profile's DEFAULT_MAX_BUCKET so the within-bucket quadratic join
-    is bounded WITHOUT opt-in); pass `drop_report={}` to receive
-    dropped_buckets/dropped_rows counts (and `cache_registry=[...]` to take
-    ownership of the cap's shared sized-bucket cache — see _cap_buckets)."""
-    buckets = _band_buckets(signatures, n_hashes, bands)
-    buckets = _cap_buckets(buckets, ["band_id", "band_key"], max_bucket,
-                           drop_report, cache_registry)
-    left = buckets.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    right = buckets.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    return (
-        left.join(right, ["band_id", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-    )
+    """Banded LSH: docs sharing any band bucket -> DISTINCT candidate
+    pairs (a < b); the bar-0 self mode of `_bucket_pairs`. `max_bucket`
+    caps bucket cardinality (see _cap_buckets; defaults to the scale
+    profile's DEFAULT_MAX_BUCKET so the within-bucket quadratic pair
+    volume is bounded WITHOUT opt-in); pass `drop_report={}` to receive
+    dropped_buckets/dropped_rows counts (and `cache_registry=[...]` to
+    take ownership of the cap's shared sized-bucket cache)."""
+    rows = _cap_buckets(_band_rows(signatures, n_hashes, bands),
+                        ["band_id", "band_key"], max_bucket, drop_report,
+                        cache_registry)
+    return (_bucket_pairs(rows, None, 0, 0)
+            .select("doc_a", "doc_b").distinct())
 
 
 def minhash_lsh_prefiltered_pairs(signatures: DataFrame,
@@ -274,190 +388,29 @@ def minhash_lsh_prefiltered_pairs(signatures: DataFrame,
                                   cache_registry: list | None = None
                                   ) -> tuple[DataFrame, DataFrame]:
     """Banded LSH candidates with the estimate prefilter applied INLINE in
-    the bucket self-join (r6, VERDICT r5 item 1 — the measured
-    scale-killer was the O(candidates) volume transiting exchanges:
-    139.5M collision pairs for 50k sf1.0 docs, 585.7M at the 530k run).
+    the bucket walk (r6, VERDICT r5 item 1 — the measured scale-killer
+    was the O(candidates) volume transiting exchanges: 139.5M collision
+    pairs for 50k sf1.0 docs, 585.7M at the 530k run).
 
-    The band rows CARRY the full `_sig_width(signatures)`-wide signature
-    (a few hundred bytes per row, O(n x bands) rows), so the collision
-    volume is generated, match-counted and pruned inside the join
-    partitions: the old shape exchanged the collision pairs THREE times
-    (distinct, then two signature joins); this shape exchanges them ZERO
-    times — only the O(n) band rows and the O(true-near-dup) survivors
-    move. Returns ``(pairs, bucket_sizes)``:
+    The band rows CARRY the full `_sig_width(signatures)`-wide signature,
+    so `_bucket_pairs` match-counts and prunes the collisions where they
+    are generated; only the O(n) band rows and the O(true-near-dup)
+    survivors move. Returns ``(pairs, bucket_sizes)``:
 
     * ``pairs`` — DISTINCT (doc_a, doc_b), exactly the set the
       distinct-then-``sig_prefilter_pairs`` composition yields (same
       mh components, same integer bar, so provably the same pairs);
-    * ``bucket_sizes`` — (band_id, band_key/band size) of CAP-SURVIVING
-      buckets, from which callers derive the collision volume as
+    * ``bucket_sizes`` — (band_id, band_key, bucket_n) of CAP-SURVIVING
+      buckets, from which callers derive the band-collision volume as
       sum(n*(n-1)/2) without ever materializing it.
     """
-    from pyspark.sql import types as T
     width = _sig_width(signatures)
-    rows_per_band = n_hashes // bands
-    entries = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows_per_band + r}").cast("string")
-                for r in range(rows_per_band)]
-        entries.append(F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(F.concat_ws("|", *cols)).alias("band_key")))
-    buckets = (signatures
-               .select("doc_id", *[f"mh_{j}" for j in range(width)],
-                       F.explode(F.array(*entries)).alias("_b"))
-               .select("doc_id", *[f"mh_{j}" for j in range(width)],
-                       F.col("_b.band_id").alias("band_id"),
-                       F.col("_b.band_key").alias("band_key")))
-    buckets = _cap_buckets(buckets, ["band_id", "band_key"], max_bucket,
-                           drop_report, cache_registry)
-    sizes = (buckets.groupBy("band_id", "band_key")
+    rows = _cap_buckets(_band_rows(signatures, n_hashes, bands, width),
+                        ["band_id", "band_key"], max_bucket, drop_report,
+                        cache_registry)
+    sizes = (rows.groupBy("band_id", "band_key")
              .agg(F.count("*").alias("bucket_n")))
-
-    id_type = signatures.schema["doc_id"].dataType
-    kernel_ids = isinstance(id_type,
-                            (T.LongType, T.IntegerType, T.StringType))
-    string_ids = isinstance(id_type, T.StringType)
-    if _PAIR_IMPL == "kernel" and kernel_ids:
-        # Arrow group-walk over buckets: per bucket a (n, width) int64
-        # matrix; pairwise match counts come from ONE vectorized numpy
-        # comparison per row block instead of per-candidate UnsafeRow
-        # production in the SMJ (the measured per-pair cost: the join
-        # materialized a 2x(width+2)-column row per collision — ~75 s for
-        # 139.5M collisions at sf1.0; the kernel does the same integer
-        # comparisons memory-bound, ~5x faster). Output is exactly the
-        # (a < b, matches >= bar) pair set; distinct() dedups the <=bands
-        # copies. The repartition matches the cap window's hash
-        # partitioning, so no extra exchange when the cap ran.
-        bar = int(min_matches)
-        id_expr = (F.col("doc_id") if string_ids
-                   else F.col("doc_id").cast("long"))
-        packed = buckets.select(
-            "band_id", "band_key", id_expr.alias("doc_id"),
-            F.array(*[f"mh_{j}" for j in range(width)]).alias("sig"))
-        n_shuffle = int(signatures.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        parted = (packed.repartition(n_shuffle, "band_id", "band_key")
-                  .sortWithinPartitions("band_id", "band_key"))
-
-        def pair_kernel(batches):
-            import pyarrow as pa
-            ids_buf: list = []
-            sig_buf: list = []
-            cur = None
-            out_a: list = []
-            out_b: list = []
-
-            def drain():
-                a = np.concatenate(out_a)
-                b = np.concatenate(out_b)
-                if string_ids:
-                    # fixed-width bytes back to str (survivors only —
-                    # tiny after the bar filter)
-                    batch = pa.RecordBatch.from_arrays([
-                        pa.array([x.decode() for x in a],
-                                 type=pa.string()),
-                        pa.array([x.decode() for x in b],
-                                 type=pa.string()),
-                    ], names=["doc_a", "doc_b"])
-                else:
-                    batch = pa.RecordBatch.from_arrays([
-                        pa.array(a, type=pa.int64()),
-                        pa.array(b, type=pa.int64()),
-                    ], names=["doc_a", "doc_b"])
-                out_a.clear(), out_b.clear()
-                return batch
-
-            def flush_bucket():
-                if not ids_buf:
-                    return
-                ids = np.concatenate(ids_buf)
-                sigs = np.vstack(sig_buf)
-                ids_buf.clear(), sig_buf.clear()
-                n = ids.size
-                if n < 2:
-                    return
-                # block size bounds the (blk x n x width) bool compare
-                # intermediate to ~64 MB (cap n=10k -> blk>=200 even at
-                # the degenerate-bucket ceiling)
-                blk = max(1, min(n, 2_000_000 // max(n, 1)))
-                for i0 in range(0, n, blk):
-                    eq = (sigs[i0:i0 + blk, None, :]
-                          == sigs[None, :, :]).sum(axis=2)
-                    ia, ib = np.nonzero(eq >= bar)
-                    a_ids = ids[i0 + ia]
-                    b_ids = ids[ib]
-                    keep = a_ids < b_ids
-                    if keep.any():
-                        out_a.append(a_ids[keep])
-                        out_b.append(b_ids[keep])
-
-            for batch in batches:
-                idx = batch.schema.get_field_index
-                bids = batch.column(idx("band_id")).to_numpy(
-                    zero_copy_only=False)
-                bkeys = batch.column(idx("band_key")).to_numpy(
-                    zero_copy_only=False)
-                if string_ids:
-                    # fixed-width bytes: elementwise a < b matches
-                    # Spark's unsigned byte-wise UTF8 order for the
-                    # ASCII ids this path carries (trailing NUL pads
-                    # sort before any byte, preserving prefix order)
-                    docs_a = np.asarray(
-                        batch.column(idx("doc_id")).to_pylist(),
-                        dtype=np.bytes_)
-                else:
-                    docs_a = batch.column(idx("doc_id")).to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                sig_col = batch.column(idx("sig"))
-                flat = sig_col.flatten().to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                sigs = flat.reshape(-1, width)
-                n = len(docs_a)
-                if n == 0:
-                    continue
-                # boundaries where (band_id, band_key) changes
-                change = np.flatnonzero(
-                    (bids[1:] != bids[:-1]) | (bkeys[1:] != bkeys[:-1])) + 1
-                bounds = np.concatenate(([0], change, [n]))
-                for gi in range(len(bounds) - 1):
-                    lo, hi = int(bounds[gi]), int(bounds[gi + 1])
-                    key = (bids[lo], bkeys[lo])
-                    if cur is not None and cur != key:
-                        flush_bucket()
-                    cur = key
-                    ids_buf.append(docs_a[lo:hi])
-                    sig_buf.append(sigs[lo:hi])
-                if out_a and sum(x.size for x in out_a) >= 1_000_000:
-                    yield drain()
-            flush_bucket()
-            if out_a:
-                yield drain()
-
-        out_schema = ("doc_a string, doc_b string" if string_ids
-                      else "doc_a long, doc_b long")
-        raw = parted.mapInArrow(pair_kernel, schema=out_schema)
-        pairs = raw.distinct()
-        if isinstance(id_type, T.IntegerType):
-            pairs = pairs.select(F.col("doc_a").cast("int").alias("doc_a"),
-                                 F.col("doc_b").cast("int").alias("doc_b"))
-        return pairs, sizes
-
-    left = buckets.select(F.col("doc_id").alias("doc_a"),
-                          *[F.col(f"mh_{j}").alias(f"_a{j}")
-                            for j in range(width)],
-                          "band_id", "band_key")
-    right = buckets.select(F.col("doc_id").alias("doc_b"),
-                           *[F.col(f"mh_{j}").alias(f"_b{j}")
-                             for j in range(width)],
-                           "band_id", "band_key")
-    matches = None
-    for j in range(width):
-        m = (F.col(f"_a{j}") == F.col(f"_b{j}")).cast("int")
-        matches = m if matches is None else matches + m
-    pairs = (left.join(right, ["band_id", "band_key"])
-             .filter(F.col("doc_a") < F.col("doc_b"))
-             .filter(matches >= F.lit(min_matches))
+    pairs = (_bucket_pairs(rows, None, int(min_matches), width)
              .select("doc_a", "doc_b").distinct())
     return pairs, sizes
 
@@ -476,6 +429,8 @@ def minhash_neardup_vs_base(new_sigs: DataFrame, base_sigs: DataFrame,
     an appended micro-batch's signatures are O(batch) to compute and LSH-
     join against the persisted base-corpus signature table, so the work
     per append is O(batch x collision volume), never a base-corpus scan.
+    It is the cross mode of the same `_bucket_pairs` walk the batch
+    paths use (the streaming set-similarity join as one operator).
 
     Candidates come from banded LSH over the first `n_hashes` components
     (both frames share the mh{j}: seed family, so band keys are
@@ -486,184 +441,16 @@ def minhash_neardup_vs_base(new_sigs: DataFrame, base_sigs: DataFrame,
     <= max_loss). This is estimate-only by design: the base corpus's
     shingles are not retained at scale, so exact Jaccard re-verification
     belongs to the next full curate_corpus run. `max_bucket` caps the
-    BASE side's degenerate buckets (the batch side is small)."""
-    from pyspark.sql import types as T
+    BASE side's degenerate buckets (the batch side is small). Returns
+    DISTINCT (doc_a, doc_b, est_matches)."""
     width = min(_sig_width(new_sigs), _sig_width(base_sigs))
     if min_matches is None:
         min_matches = prefilter_min_matches(threshold, width, max_loss)
-
-    def band_rows_wide(sigs):
-        rows_per_band = n_hashes // bands
-        entries = []
-        for bd in range(bands):
-            cols = [F.col(f"mh_{bd * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)]
-            entries.append(F.struct(
-                F.lit(bd).alias("band_id"),
-                F.md5(F.concat_ws("|", *cols)).alias("band_key")))
-        return (sigs
-                .select("doc_id", *[f"mh_{j}" for j in range(width)],
-                        F.explode(F.array(*entries)).alias("_b"))
-                .select("doc_id", *[f"mh_{j}" for j in range(width)],
-                        F.col("_b.band_id").alias("band_id"),
-                        F.col("_b.band_key").alias("band_key")))
-
-    id_type = new_sigs.schema["doc_id"].dataType
-    same_ids = id_type == base_sigs.schema["doc_id"].dataType
-    string_ids = isinstance(id_type, T.StringType)
-    kernel_ok = same_ids and isinstance(
-        id_type, (T.LongType, T.IntegerType, T.StringType))
-    if _PAIR_IMPL == "kernel" and kernel_ok:
-        # r6: two-sided variant of the minhash_lsh_prefiltered_pairs
-        # kernel — band rows carry the signature AND a side tag, so the
-        # new x base collision volume is generated, match-counted and
-        # bar-filtered inside the bucket partitions; the O(collisions)
-        # distinct + two signature joins of the old shape never move
-        # any exchange. Same (doc_a, doc_b, est_matches) set.
-        bar = int(min_matches)
-        id_expr = (F.col("doc_id") if string_ids
-                   else F.col("doc_id").cast("long"))
-        nw = band_rows_wide(new_sigs).withColumn("side", F.lit(0))
-        bw = _cap_buckets(band_rows_wide(base_sigs),
-                          ["band_id", "band_key"], max_bucket, drop_report,
-                          cache_registry).withColumn("side", F.lit(1))
-        packed = nw.unionByName(bw).select(
-            "band_id", "band_key", "side", id_expr.alias("doc_id"),
-            F.array(*[f"mh_{j}" for j in range(width)]).alias("sig"))
-        n_shuffle = int(new_sigs.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        parted = (packed.repartition(n_shuffle, "band_id", "band_key")
-                  .sortWithinPartitions("band_id", "band_key"))
-
-        def pair_kernel(batches):
-            import pyarrow as pa
-            ids_buf: list = []
-            sig_buf: list = []
-            side_buf: list = []
-            cur = None
-            out_a: list = []
-            out_b: list = []
-            out_m: list = []
-
-            def drain():
-                a = np.concatenate(out_a)
-                b = np.concatenate(out_b)
-                m = np.concatenate(out_m)
-                if string_ids:
-                    cols = [pa.array([x.decode() for x in a],
-                                     type=pa.string()),
-                            pa.array([x.decode() for x in b],
-                                     type=pa.string())]
-                else:
-                    cols = [pa.array(a, type=pa.int64()),
-                            pa.array(b, type=pa.int64())]
-                cols.append(pa.array(m.astype(np.int32), type=pa.int32()))
-                batch = pa.RecordBatch.from_arrays(
-                    cols, names=["doc_a", "doc_b", "est_matches"])
-                out_a.clear(), out_b.clear(), out_m.clear()
-                return batch
-
-            def flush_bucket():
-                if not ids_buf:
-                    return
-                ids = np.concatenate(ids_buf)
-                sigs = np.vstack(sig_buf)
-                sides = np.concatenate(side_buf)
-                ids_buf.clear(), sig_buf.clear(), side_buf.clear()
-                new_m = sides == 0
-                base_m = ~new_m
-                if not new_m.any() or not base_m.any():
-                    return
-                a_ids, a_sigs = ids[new_m], sigs[new_m]
-                b_ids, b_sigs = ids[base_m], sigs[base_m]
-                nb_rows = b_ids.size
-                blk = max(1, 2_000_000 // max(nb_rows, 1))
-                for i0 in range(0, a_ids.size, blk):
-                    eq = (a_sigs[i0:i0 + blk, None, :]
-                          == b_sigs[None, :, :]).sum(axis=2)
-                    ia, ib = np.nonzero(eq >= bar)
-                    pa_ids = a_ids[i0 + ia]
-                    pb_ids = b_ids[ib]
-                    keep = pa_ids != pb_ids
-                    if keep.any():
-                        out_a.append(pa_ids[keep])
-                        out_b.append(pb_ids[keep])
-                        out_m.append(eq[ia, ib][keep])
-
-            for batch in batches:
-                idx = batch.schema.get_field_index
-                bids = batch.column(idx("band_id")).to_numpy(
-                    zero_copy_only=False)
-                bkeys = batch.column(idx("band_key")).to_numpy(
-                    zero_copy_only=False)
-                sides_a = batch.column(idx("side")).to_numpy(
-                    zero_copy_only=False)
-                if string_ids:
-                    docs_a = np.asarray(
-                        batch.column(idx("doc_id")).to_pylist(),
-                        dtype=np.bytes_)
-                else:
-                    docs_a = batch.column(idx("doc_id")).to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                flat = batch.column(idx("sig")).flatten().to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                sigs = flat.reshape(-1, width)
-                n = len(docs_a)
-                if n == 0:
-                    continue
-                change = np.flatnonzero(
-                    (bids[1:] != bids[:-1]) | (bkeys[1:] != bkeys[:-1])) + 1
-                bounds = np.concatenate(([0], change, [n]))
-                for gi in range(len(bounds) - 1):
-                    lo, hi = int(bounds[gi]), int(bounds[gi + 1])
-                    key = (bids[lo], bkeys[lo])
-                    if cur is not None and cur != key:
-                        flush_bucket()
-                    cur = key
-                    ids_buf.append(docs_a[lo:hi])
-                    sig_buf.append(sigs[lo:hi])
-                    side_buf.append(sides_a[lo:hi])
-                if out_a and sum(x.size for x in out_a) >= 1_000_000:
-                    yield drain()
-            flush_bucket()
-            if out_a:
-                yield drain()
-
-        id_sql = "string" if string_ids else "long"
-        raw = parted.mapInArrow(
-            pair_kernel,
-            schema=f"doc_a {id_sql}, doc_b {id_sql}, est_matches int")
-        pairs = raw.distinct()
-        if isinstance(id_type, T.IntegerType):
-            pairs = pairs.select(
-                F.col("doc_a").cast("int").alias("doc_a"),
-                F.col("doc_b").cast("int").alias("doc_b"),
-                "est_matches")
-        return pairs
-
-    nb = (_band_buckets(new_sigs, n_hashes, bands)
-          .withColumnRenamed("doc_id", "doc_a"))
-    bb = _cap_buckets(_band_buckets(base_sigs, n_hashes, bands),
-                      ["band_id", "band_key"], max_bucket, drop_report,
-                      cache_registry)
-    bb = bb.withColumnRenamed("doc_id", "doc_b")
-    pairs = (nb.join(bb, ["band_id", "band_key"])
-             .filter(F.col("doc_a") != F.col("doc_b"))
-             .select("doc_a", "doc_b").distinct())
-    a = new_sigs.select(F.col("doc_id").alias("doc_a"),
-                        *[F.col(f"mh_{j}").alias(f"_a{j}")
-                          for j in range(width)])
-    b = base_sigs.select(F.col("doc_id").alias("doc_b"),
-                         *[F.col(f"mh_{j}").alias(f"_b{j}")
-                           for j in range(width)])
-    matches = None
-    for j in range(width):
-        m = (F.col(f"_a{j}") == F.col(f"_b{j}")).cast("int")
-        matches = m if matches is None else matches + m
-    return (pairs.join(a, "doc_a").join(b, "doc_b")
-            .withColumn("est_matches", matches)
-            .filter(F.col("est_matches") >= min_matches)
-            .select("doc_a", "doc_b", "est_matches"))
+    base_rows = _cap_buckets(_band_rows(base_sigs, n_hashes, bands, width),
+                             ["band_id", "band_key"], max_bucket,
+                             drop_report, cache_registry)
+    return _bucket_pairs(_band_rows(new_sigs, n_hashes, bands, width),
+                         base_rows, int(min_matches), width).distinct()
 
 
 # Estimate-signature width for the verify prefilter. Wider than the

@@ -147,8 +147,9 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, str]], k: int = 10,
         for t, w in seen.items():
             qtok.append((qid, t, float(w)))
     if not qtok:
+        id_type = docs.schema["doc_id"].dataType.simpleString()
         return spark.createDataFrame(
-            [], "qid string, doc_id long, score double, rank int")
+            [], f"qid string, doc_id {id_type}, score double, rank int")
     qterm_list = sorted({t for _, t, _ in qtok})
 
     words = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
