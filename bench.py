@@ -35,6 +35,8 @@ from text_retrieval_and_search_engines_spark.plans.index_build import (  # noqa:
     IndexConfig, build_index)
 from text_retrieval_and_search_engines_spark.plans.query import (  # noqa: E402
     IndexReader, SearchParams, search, search_fast)
+from text_retrieval_and_search_engines_spark.session import (  # noqa: E402
+    session_builder)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
@@ -47,12 +49,10 @@ ENTRY_OPS = [
 
 
 def make_spark(cpus: int) -> SparkSession:
-    # single-threaded python workers: one malloc arena avoids heavy kernel
-    # contention at high worker counts (see session.py)
-    os.environ.setdefault("MALLOC_ARENA_MAX", "1")
+    # Python-worker settings (malloc arenas, the engine's daemon) come from
+    # session.py so these layer numbers match what perfbench measures
     return (
-        SparkSession.builder.appName("bench")
-        .master(f"local[{cpus}]")
+        session_builder("bench", f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")

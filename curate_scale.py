@@ -89,7 +89,7 @@ def main() -> None:
         "docs_per_sec": round(n_in / wall, 1),
         "stats": stats,
         "band_collisions": pre("band_collisions_in"),
-        "prefiltered": pre("band_collisions_in") - pre("candidates_pruned"),
+        "prefiltered": pre("pairs_prefiltered"),
         "verified_pairs": m.get(("curate_minhash_verify", "pairs_verified"),
                                 0),
         "prefilter_bar": pre("min_matches"),

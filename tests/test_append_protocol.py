@@ -727,6 +727,29 @@ def test_manifest_pruning_drops_curated_epoch_markers(spark, tmp_path):
     assert len(snaps) == base_entries + 20 * 4 + 1
 
 
+def test_manifest_pruning_keeps_non_epoch_metrics_markers(tmp_path):
+    """Only the epoch-scoped 'curate_append-metrics:{tag}' markers retire
+    with their epoch: another '...-metrics:' fingerprint whose suffix
+    happens to equal a retired tag is not an epoch marker and stays."""
+    cat = Catalog(str(tmp_path / "cat"))
+    for i in range(3):
+        tag = f"ct{i}"
+        cat._append_snapshot({"table": "_epochs",
+                              "fingerprint": f"{tag}:commit",
+                              "epoch_tag": tag, "tables": []})
+        cat._append_snapshot({"table": "metrics",
+                              "fingerprint": f"curate_append-metrics:{tag}"})
+        cat._append_snapshot({"table": "_epochs",
+                              "fingerprint": f"{tag}:done"})
+    cat._append_snapshot({"table": "metrics",
+                          "fingerprint": "report-metrics:ct0"})
+    assert cat.prune_manifest(keep_epochs=1) == 2 * 3
+    fps = [s["fingerprint"] for s in cat._load_manifest()["snapshots"]]
+    assert "curate_append-metrics:ct0" not in fps
+    assert "curate_append-metrics:ct2" in fps
+    assert "report-metrics:ct0" in fps
+
+
 def test_streaming_dedup_winner_deterministic(spark, tmp_path):
     """ADVICE r2: among same-batch duplicates the surviving row is the
     minimum (warc_ts, url) — not an arbitrary arrival-order artifact."""

@@ -59,9 +59,12 @@ def test_curate_drops_every_reason_and_records_metrics(spark, planted,
     # the LSH bucket-cap drop report landed too (cap disabled -> zeros)
     assert by[("curate_minhash_lsh", "dropped_rows")] == 0
     # ...and the estimate-prefilter report (band collisions counted,
-    # bar + calibrated loss bound recorded — no silent truncation)
-    assert by[("curate_minhash_prefilter", "band_collisions_in")] >= \
-        by[("curate_minhash_prefilter", "candidates_pruned")]
+    # bar + calibrated loss bound recorded — no silent truncation).
+    # pairs_prefiltered counts distinct pairs surviving the bar: here the
+    # one planted near-dup pair (1, 6), which exact verification keeps.
+    assert by[("curate_minhash_prefilter", "pairs_prefiltered")] == 1
+    assert by[("curate_minhash_verify", "pairs_verified")] <= \
+        by[("curate_minhash_prefilter", "pairs_prefiltered")]
     assert by[("curate_minhash_prefilter", "min_matches")] == 8  # thr 0.5
     assert 0 < by[("curate_minhash_prefilter", "true_pair_loss_ppm")] <= 2000
 

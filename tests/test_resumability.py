@@ -86,3 +86,58 @@ def test_empty_corpus_build_and_query(spark, tmp_path):
     qdf = spark.createDataFrame([("q", "anything")],
                                 "qid string, text string")
     assert search(reader, qdf, SearchParams(k=5)).count() == 0
+
+
+_CFG = ib.IndexConfig(range_size=64, block=16, langs=(), recompute_text=False,
+                      materialize_docs=False)
+
+
+def _top10(spark, catalog, text="spark index data"):
+    from text_retrieval_and_search_engines_spark.plans.query import (
+        IndexReader, SearchParams, search_fast)
+    reader = IndexReader(spark, catalog)
+    return reader.n_docs, [(r["docid"], r["score"]) for r in search_fast(
+        reader, [("q", text)], SearchParams(k=10)).collect()]
+
+
+def test_rebuild_after_overwrite_by_another_build(spark, tmp_path):
+    """A later overwrite by another build (another fingerprint) replaces
+    the files a snapshot names: building the first config again must redo
+    every phase, not resume onto the other build's data."""
+    pages_a = spark.createDataFrame(synth_pages(60, seed=21, vocab_size=200))
+    pages_b = spark.createDataFrame(synth_pages(40, seed=22, vocab_size=200))
+    cfg_b = ib.IndexConfig(range_size=32, block=8, langs=(),
+                           recompute_text=False, materialize_docs=False)
+    ref = Catalog(str(tmp_path / "ref"))
+    ib.build_index(spark, pages_a, ref, _CFG, input_fp="a")
+
+    cat = Catalog(str(tmp_path / "cat"))
+    ib.build_index(spark, pages_a, cat, _CFG, input_fp="a")
+    ib.build_index(spark, pages_b, cat, cfg_b, input_fp="b")
+    assert not cat.has_table("doc_tokens", _CFG.fingerprint("a"))
+    info = ib.build_index(spark, pages_a, cat, _CFG, input_fp="a")
+    assert set(info["phase_sec"]) == {"tokenize", "postings", "meta"}
+    assert info["n_docs"] == 60
+    assert _top10(spark, cat) == _top10(spark, ref)
+
+
+def test_build_after_append_and_compact_resumes(spark, tmp_path):
+    """Append and compaction markers extend the base build's tables: the
+    same build call afterwards skips every phase and keeps the appended
+    documents searchable."""
+    from text_retrieval_and_search_engines_spark.streaming.incremental import (
+        append_pages_batch, compact_postings)
+    p1 = synth_pages(60, seed=11, vocab_size=200)
+    p2 = synth_pages(40, seed=12, vocab_size=200)
+    p2["url"] = p2["url"].str.replace("doc", "newdoc")  # disjoint urls
+    cat = Catalog(str(tmp_path / "cat"))
+    pages = spark.createDataFrame(p1)
+    ib.build_index(spark, pages, cat, _CFG, input_fp="b0")
+    append_pages_batch(spark, spark.createDataFrame(p2), cat, _CFG)
+    compact_postings(spark, cat, _CFG)
+    before = _top10(spark, cat)
+    assert before[0] == 100
+
+    info = ib.build_index(spark, pages, cat, _CFG, input_fp="b0")
+    assert info["phase_sec"] == {}
+    assert _top10(spark, cat) == before

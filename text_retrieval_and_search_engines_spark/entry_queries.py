@@ -942,14 +942,19 @@ _ENGINE_CACHE: dict[str, object] = {}
 
 def _engine_reader(spark, sf_dir):
     if sf_dir not in _ENGINE_CACHE:
-        import hashlib
+        import atexit
+        import shutil
+        import tempfile
 
         from .plans.index_build import IndexConfig, build_index
         from .plans.query import IndexReader
         from .sources.tables import Catalog
 
-        root = ("/tmp/entry_engine_"
-                + hashlib.md5(sf_dir.encode()).hexdigest()[:10])
+        # a fresh directory per process: a fixed path shared by every
+        # checkout and process would resume from another code version's
+        # build; the in-process cache below is the reuse
+        root = tempfile.mkdtemp(prefix="entry_engine_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
         catalog = Catalog(root)
         cfg = IndexConfig(range_size=4096, analyzer="simple", langs=(),
                           recompute_text=False, materialize_docs=False)

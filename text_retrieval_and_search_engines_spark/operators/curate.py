@@ -262,7 +262,7 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, catalog,
             # `band_collisions_in` counts band collisions (pre-distinct,
             # a pair once per shared band); a distinct-candidate count
             # would itself cost the O(candidates) exchange the pair kernel
-            # avoids.
+            # avoids. `pairs_prefiltered` counts distinct surviving pairs.
             n_cand = int(bucket_sizes.agg(F.coalesce(
                 F.sum(F.col("bucket_n") * (F.col("bucket_n") - 1)),
                 F.lit(0)).alias("c")).collect()[0]["c"] // 2)
@@ -280,8 +280,8 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, catalog,
                 spark.createDataFrame(
                     [("curate_minhash_prefilter", "band_collisions_in",
                       n_cand),
-                     ("curate_minhash_prefilter", "candidates_pruned",
-                      n_cand - n_pref),
+                     ("curate_minhash_prefilter", "pairs_prefiltered",
+                      n_pref),
                      ("curate_minhash_prefilter", "min_matches", bar),
                      ("curate_minhash_prefilter", "n_components",
                       dedup.PREFILTER_N),

@@ -100,15 +100,23 @@ class Catalog:
             "committed_at": time.time(),
         })
 
-    def snapshot_is_live(self, table: str, fingerprint: str) -> bool:
+    def snapshot_is_live(self, table: str, fingerprint: str,
+                         unmarked_overwrite: bool = True) -> bool:
         """True iff a snapshot matching `fingerprint` exists AND has not been
-        superseded by a later overwrite-mode write of the same table. An
-        append's idempotence marker (e.g. ``neardup-sigs:{tag}``) dies with
-        the table state it appended to: after ``write_table(...,
-        mode="overwrite")`` rebuilds the table, replaying the same tag must
-        re-process, not skip — `snapshot_for` alone would match the stale
-        marker. Entries written before the manifest recorded `mode` count
-        as overwrites (the conservative direction: re-process)."""
+        superseded by a later overwrite-mode write of the same table with
+        another fingerprint. An append's idempotence marker (e.g.
+        ``neardup-sigs:{tag}``) dies with the table state it appended to:
+        after ``write_table(..., mode="overwrite")`` rebuilds the table,
+        replaying the same tag must re-process, not skip — `snapshot_for`
+        alone would match the stale marker.
+
+        `unmarked_overwrite` says how an entry without `mode` counts. True
+        (the default): as an overwrite, the conservative direction for
+        entries written before the manifest recorded `mode` (re-process).
+        False (`has_table`): as no overwrite, because the append and
+        compaction markers of streaming/incremental.py carry no mode and
+        extend the table state rather than replace it."""
+        unmarked = "overwrite" if unmarked_overwrite else None
         match = overwrite = None
         for s in self._load_manifest()["snapshots"]:
             if s["table"] != table:
@@ -116,9 +124,9 @@ class Catalog:
             sid = s.get("snapshot_id", 0)
             if s.get("fingerprint") == fingerprint:
                 match = sid
-            if s.get("mode", "overwrite") == "overwrite":
+            elif s.get("mode", unmarked) == "overwrite":
                 overwrite = sid
-        return match is not None and (overwrite is None or match >= overwrite)
+        return match is not None and (overwrite is None or match > overwrite)
 
     def epoch_state(self) -> tuple[set[str], set[str]]:
         """(pending, done) epoch tags from the manifest — pending = commit
@@ -234,16 +242,16 @@ class Catalog:
                 if s["table"] == "_epochs":
                     tag = fp.rsplit(":", 1)[0]
                     return tag in old_tags
-                # r6 (ADVICE r5): curated appends add per-epoch
-                # 'neardup-sigs:{tag}' and '{phase}-metrics:{tag}'
-                # markers too — without pruning them a long curated
-                # stream grows the manifest ~2 entries/epoch unbounded
-                # and snapshot_is_live scans it all every epoch.
-                for prefix in ("append-delta:", "append:", "neardup-sigs:"):
+                # curated appends add per-epoch 'neardup-sigs:{tag}' and
+                # 'curate_append-metrics:{tag}' markers too — without
+                # pruning them a long curated stream grows the manifest ~2
+                # entries/epoch unbounded and snapshot_is_live scans it all
+                # every epoch. Only that epoch-scoped phase is matched: any
+                # other '...-metrics:' fingerprint is not an epoch marker.
+                for prefix in ("append-delta:", "append:", "neardup-sigs:",
+                               "curate_append-metrics:"):
                     if fp.startswith(prefix):
                         return fp[len(prefix):] in old_tags
-                if "-metrics:" in fp:
-                    return fp.split("-metrics:", 1)[1] in old_tags
                 return False
 
             kept = [s for s in snaps if not is_old_epoch_entry(s)]
@@ -264,6 +272,15 @@ class Catalog:
         return None if s is None else s.get("fingerprint")
 
     def has_table(self, table: str, fingerprint: str | None = None) -> bool:
-        if self.snapshot_for(table, fingerprint) is None:
+        """True iff `table` exists and, given `fingerprint`, its files are
+        still that build's: a later explicit overwrite by another build
+        (another fingerprint) means they are not, so a resumable build must
+        redo the phase instead of reading the other build's files."""
+        if fingerprint is None:
+            live = self.snapshot_for(table) is not None
+        else:
+            live = self.snapshot_is_live(table, fingerprint,
+                                         unmarked_overwrite=False)
+        if not live:
             return False
         return self.use_iceberg or os.path.exists(self.path(table))
