@@ -171,3 +171,138 @@ def test_degenerate_query_text(spark, tiny_index, text):
     for df in (search(reader, empty_df, p), search_fast(reader, [], p)):
         assert df.schema.simpleString() == _EMPTY_SCHEMA
         assert df.count() == 0
+
+
+# ------------------------------------------- scoring placement bit-identity
+# search scores a small matched set on the driver and a large one on the
+# cluster (plans/query.py DRIVER_SCORING_MAX_POSTINGS). Both placements run
+# one kernel generator over rows in one order, so every case below must
+# come back with exactly equal (qid, rank, docid, score) rows.
+
+TIE_TEXT = "zebra quokka zebra"
+
+
+@pytest.fixture(scope="module")
+def appended_reader(spark, tmp_path_factory):
+    """range_size 32: 100 base docs + one appended epoch of 50, so base
+    docs 96-99 and appended docs 100-127 share range 3 (two chunks per
+    (term, range_id)), and a query spans up to 5 ranges. Four docs, one
+    of them appended, carry the same planted text: a tie at any k < 4."""
+    from text_retrieval_and_search_engines_spark.plans.index_build import (
+        IndexConfig, build_index)
+    from text_retrieval_and_search_engines_spark.plans.query import (
+        IndexReader)
+    from text_retrieval_and_search_engines_spark.sources.pages import (
+        synth_pages)
+    from text_retrieval_and_search_engines_spark.sources.tables import (
+        Catalog)
+    from text_retrieval_and_search_engines_spark.streaming.incremental import (
+        append_pages_batch)
+
+    pages = synth_pages(150, seed=42, vocab_size=500)
+    pages.loc[[3, 40, 77, 120], "text"] = TIE_TEXT
+    cfg = IndexConfig(range_size=32, block=16, langs=(),
+                      recompute_text=False, materialize_docs=False)
+    cat = Catalog(str(tmp_path_factory.mktemp("placement")))
+    build_index(spark, spark.createDataFrame(pages[:100]), cat, cfg,
+                input_fp="placement")
+    append_pages_batch(spark, spark.createDataFrame(pages[100:]), cat, cfg)
+    reader = IndexReader(spark, cat)
+    assert reader.n_docs == 150
+    assert (reader.postings.groupBy("term", "range_id").count()
+            .filter("count > 1").count()) > 0
+    return reader
+
+
+def _placement_runs(reader, monkeypatch, run) -> dict:
+    """{placement: sorted (qid, rank, docid, score) rows of run()}, each
+    placement forced through the bound, with the reader's placement
+    counter checked to show the path taken."""
+    from text_retrieval_and_search_engines_spark.plans import query
+
+    runs = {}
+    for placement, bound in (("cluster", -1), ("driver", 1 << 62)):
+        monkeypatch.setattr(query, "DRIVER_SCORING_MAX_POSTINGS", bound)
+        before = reader.placements.copy()
+        df = run()
+        assert df.schema.simpleString() == _EMPTY_SCHEMA
+        runs[placement] = sorted(
+            tuple(r) for r in df.select("qid", "rank", "docid", "score")
+            .collect())
+        # a batch with hits took exactly this placement; one with none may
+        # have stopped before scoring (no query term in the index)
+        taken = set(reader.placements - before)
+        assert taken <= {placement} and (taken or not runs[placement]), \
+            taken
+    return runs
+
+
+@pytest.mark.parametrize("mode", ["or", "and"])
+@pytest.mark.parametrize("algo", ["exact", "bmw"])
+def test_placements_bit_identical(spark, appended_reader, monkeypatch,
+                                  algo, mode):
+    reader = appended_reader
+    qpdf = synth_queries(6, seed=42, vocab_size=500)
+    good = [(q, t) for q, t in zip(qpdf["qid"], qpdf["text"])
+            if reader.df_lookup(tokenize(t))]
+    assert len(good) >= 3
+    rows = good + [("dup", good[0][1]), ("dup", good[1][1]),
+                   ("oov", "zzzmissing qqqnothere"), ("tie", TIE_TEXT)]
+    tied = None
+    for k in (1000, 10, 2):
+        runs = _placement_runs(reader, monkeypatch, lambda: search_fast(
+            reader, rows, SearchParams(k=k, algo=algo, mode=mode)))
+        assert runs["driver"] == runs["cluster"], (k, algo, mode)
+        got = runs["driver"]
+        assert "oov" not in {q for q, _, _, _ in got}
+        tie = [(d, s) for q, _, d, s in got if q == "tie"]
+        assert len(tie) == min(k, 4) and len({s for _, s in tie}) == 1
+        if k == 1000:
+            # k exceeds every qid's hit count; one qid spans >= 3 ranges
+            assert all(r <= 150 for _, r, _, _ in got)
+            assert max(len({d // 32 for q2, _, d, _ in got if q2 == q})
+                       for q, _ in rows) >= 3
+            tied = sorted(d for d, _ in tie)
+        # a tie at the k-th score keeps the smallest docids
+        assert [d for d, _ in tie] == tied[:k]
+    # no hits: an OOV-only batch (nothing to score) and, in mode="and", two
+    # terms that share no doc (the kernel emits nothing) -> the empty
+    # ranked frame in either placement
+    runs = _placement_runs(reader, monkeypatch, lambda: search_fast(
+        reader, [("oov", "zzzmissing")], SearchParams(algo=algo, mode=mode)))
+    assert runs == {"cluster": [], "driver": []}
+    apart = f"zebra {tokenize(good[0][1])[0]}"
+    runs = _placement_runs(reader, monkeypatch, lambda: search_fast(
+        reader, [("apart", apart)], SearchParams(algo=algo, mode=mode)))
+    assert runs["driver"] == runs["cluster"]
+    assert bool(runs["driver"]) == (mode == "or")
+
+
+def test_rm3_placements_bit_identical(spark, tiny_index, monkeypatch):
+    """RM3's feedback pass and its weighted second pass both go through
+    the placement choice."""
+    reader, oracle, catalog, en = tiny_index
+    _, qdf = _queries_df(spark, n=4)
+    docs = catalog.read_table(spark, "docs")
+    runs = _placement_runs(reader, monkeypatch, lambda: search_rm3(
+        reader, qdf, docs, params=SearchParams(k=20)))
+    assert runs["driver"] and runs["driver"] == runs["cluster"]
+
+
+def test_driver_lookup_runs_one_spark_job(spark, tiny_index):
+    """A warm k=10 search_fast below the bound is ONE Spark job (the
+    pruned postings fetch); its result is a local relation, so collecting
+    it runs none."""
+    reader = tiny_index[0]
+    q, p = [("q", "spark data")], SearchParams(k=10)
+    search_fast(reader, q, p).collect()          # warm the df memo
+    sc = spark.sparkContext
+    before = reader.placements["driver"]
+    sc.setJobGroup("driver-lookup", "warm k=10 search_fast")
+    try:
+        rows = search_fast(reader, q, p).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert reader.placements["driver"] == before + 1
+    assert len(sc.statusTracker().getJobIdsForGroup("driver-lookup")) == 1

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from text_retrieval_and_search_engines_spark.plans import query
 from text_retrieval_and_search_engines_spark.plans.query import (
     SearchParams, search, search_fast)
 
@@ -26,31 +27,74 @@ def reader(tiny_index):
     return tiny_index[0]
 
 
-def test_exact_scan_prunes_blockmax_columns(spark, reader):
+@pytest.fixture
+def cluster_placement(monkeypatch):
+    """Force the cluster placement (broadcast join -> scoring exchange ->
+    window): the pins that use it read that plan's shape, which the driver
+    placement does not have."""
+    monkeypatch.setattr(query, "DRIVER_SCORING_MAX_POSTINGS", -1)
+
+
+@pytest.fixture
+def scan_plans(monkeypatch):
+    """run -> {placement: physical plan that reads run()'s postings}: the
+    cluster result's own plan, and the plan of the pruned postings frame
+    the driver placement fetched (its result is a local relation)."""
+    fetched = []
+    real = query._rank_on_driver
+
+    def spy(spark, postings, *rest):
+        fetched.append(postings)
+        return real(spark, postings, *rest)
+
+    monkeypatch.setattr(query, "_rank_on_driver", spy)
+
+    def plans(run) -> dict:
+        out = {}
+        for placement, bound in (("cluster", -1), ("driver", 1 << 62)):
+            monkeypatch.setattr(query, "DRIVER_SCORING_MAX_POSTINGS", bound)
+            res = run()
+            out[placement] = _plan(fetched.pop() if placement == "driver"
+                                   else res)
+            assert not fetched, placement
+        return out
+
+    return plans
+
+
+def _scan_lines(plan: str) -> list[str]:
+    return [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+
+
+def test_exact_scan_prunes_blockmax_columns(spark, reader, scan_plans):
     """Exact mode must NOT read the block-max/skip columns — that is ~40%
     of postings bytes paid for nothing (PLANS.md 'column pruning')."""
     qdf = spark.createDataFrame([("q", "spark data")],
                                 "qid string, text string")
-    plan = _plan(search(reader, qdf, SearchParams(k=5, algo="exact")))
-    scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert scan, plan
-    schema_line = scan[0]
-    assert "payload" in schema_line
-    for col in ("block_last", "block_max_tf", "goff"):
-        assert col not in schema_line, schema_line
+    plans = scan_plans(
+        lambda: search(reader, qdf, SearchParams(k=5, algo="exact")))
+    for plan in plans.values():
+        scan = _scan_lines(plan)
+        assert scan, plan
+        schema_line = scan[0]
+        assert "payload" in schema_line
+        for col in ("block_last", "block_max_tf", "goff"):
+            assert col not in schema_line, schema_line
 
 
-def test_bmw_scan_reads_blockmax_columns(spark, reader):
+def test_bmw_scan_reads_blockmax_columns(spark, reader, scan_plans):
     qdf = spark.createDataFrame([("q", "spark data")],
                                 "qid string, text string")
-    plan = _plan(search(reader, qdf, SearchParams(k=5, algo="bmw")))
-    scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert scan and "block_last" in scan[0] and "goff" in scan[0]
+    plans = scan_plans(
+        lambda: search(reader, qdf, SearchParams(k=5, algo="bmw")))
+    for plan in plans.values():
+        scan = _scan_lines(plan)
+        assert scan and "block_last" in scan[0] and "goff" in scan[0]
 
 
 def _assert_bucket_partition_filter(plan: str) -> None:
     """The scan's PartitionFilters must constrain term_bucket beyond
-    nullness."""
+    nullness, and the query's `term IN` must be pushed into the scan."""
     assert "term_bucket" in plan
     part_lines = [ln for ln in plan.splitlines()
                   if "PartitionFilters" in ln]
@@ -58,24 +102,30 @@ def _assert_bucket_partition_filter(plan: str) -> None:
     assert any(("term_bucket IN" in ln) or ("term_bucket =" in ln)
                or ("term_bucket#" in ln and "IN" in ln)
                for ln in part_lines), "\n".join(part_lines)
+    assert any("PushedFilters" in ln and "In(term, [" in ln
+               for ln in _scan_lines(plan)), plan
 
 
-def test_search_fast_static_bucket_pruning(spark, reader):
+def test_search_fast_static_bucket_pruning(spark, reader, scan_plans):
     """Driver-computed bucket list must appear as a partition filter on the
     postings scan (the Lucene-term-dictionary analogue)."""
-    df = search_fast(reader, [("q", "spark data")], SearchParams(k=5))
-    _assert_bucket_partition_filter(_plan(df))
+    plans = scan_plans(
+        lambda: search_fast(reader, [("q", "spark data")], SearchParams(k=5)))
+    for plan in plans.values():
+        _assert_bucket_partition_filter(plan)
 
 
-def test_batch_search_static_bucket_pruning(spark, reader):
+def test_batch_search_static_bucket_pruning(spark, reader, scan_plans):
     """Batch search takes the same driver-side query path, so it prunes the
     same term_bucket directories before the scan."""
     qdf = spark.createDataFrame([("q", "spark data")],
                                 "qid string, text string")
-    _assert_bucket_partition_filter(
-        _plan(search(reader, qdf, SearchParams(k=5))))
+    plans = scan_plans(lambda: search(reader, qdf, SearchParams(k=5)))
+    for plan in plans.values():
+        _assert_bucket_partition_filter(plan)
 
 
+@pytest.mark.usefixtures("cluster_placement")
 @pytest.mark.parametrize("algo", ["exact", "bmw"])
 def test_scoring_exchange_is_input_sized(spark, reader, algo):
     """The scoring exchange carries no explicit partition count, so AQE may
@@ -86,6 +136,7 @@ def test_scoring_exchange_is_input_sized(spark, reader, algo):
     assert "REPARTITION_BY_NUM" not in plan, plan
 
 
+@pytest.mark.usefixtures("cluster_placement")
 def test_search_fast_scoring_stage_coalesced(spark, reader):
     """After a warm single query collects, its final adaptive plan reads the
     scoring exchange through a coalesced AQE shuffle read: a few matched
@@ -101,6 +152,7 @@ def test_search_fast_scoring_stage_coalesced(spark, reader):
     assert "ShuffleQueryStage" in above[1], "\n".join(lines)
 
 
+@pytest.mark.usefixtures("cluster_placement")
 def test_query_terms_are_broadcast_side(spark, reader):
     """The broadcast build side must be the tiny query-term dimension,
     never the postings table."""
@@ -122,6 +174,7 @@ def test_query_terms_are_broadcast_side(spark, reader):
             assert not bcast_stack, f"postings scan under broadcast:\n{ln}"
 
 
+@pytest.mark.usefixtures("cluster_placement")
 def test_window_group_limit_partial(spark, reader):
     """Catalyst must insert the partial top-k (WindowGroupLimit) before the
     per-qid merge exchange, so scoring partitions pre-truncate to k."""
@@ -163,3 +216,29 @@ def test_bm25_topk_empty_query_keeps_doc_id_type(spark):
     assert empty.schema.simpleString() == full.schema.simpleString()
     assert empty.schema["doc_id"].dataType.simpleString() == "string"
     assert empty.count() == 0
+
+
+def test_null_text_counts_zero_tokens_with_ansi_off(spark, tmp_path):
+    """size(null) is -1 under spark.sql.ansi.enabled=false (the legacy
+    sizeOfNull default): a null-text doc must still add 0 tokens to
+    total_tokens / avgdl, so results do not depend on the ANSI conf."""
+    from text_retrieval_and_search_engines_spark.entry_queries import (
+        q_collection_stats)
+    from text_retrieval_and_search_engines_spark.plans.bm25_relational import (
+        bm25_topk)
+
+    rows = [(1, "spark engines index"), (2, "inverted index spark"),
+            (3, None)]
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "documents.parquet"))
+    legacy = spark.newSession()
+    legacy.conf.set("spark.sql.ansi.enabled", "false")
+    got = {}
+    for name, s in (("ansi", spark), ("legacy", legacy)):
+        docs = s.createDataFrame(rows, "doc_id long, text string")
+        got[name] = (
+            [tuple(r) for r in bm25_topk(docs, [("q", "spark index")], k=5)
+             .orderBy("rank").collect()],
+            tuple(q_collection_stats(s, str(tmp_path)).collect()[0]))
+    assert got["ansi"][1] == (3, 6, 2.0)
+    assert got["legacy"] == got["ansi"]

@@ -182,7 +182,8 @@ def q_collection_stats(spark, sf_dir):
     # exploded rows, no explode pass (guide §2.3 narrow aggregation)
     words = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                      lambda w: w != "")
-    return (docs.select(F.size(words).alias("_n"))
+    # a null text counts as no tokens (size(null) is -1 with ANSI off)
+    return (docs.select(F.size(F.coalesce(words, F.array())).alias("_n"))
             .agg(F.sum("_n").alias("total_tokens"))
             .select(F.lit(n_docs).cast("long").alias("n_docs"),
                     "total_tokens",
@@ -1212,12 +1213,16 @@ def q_curate(spark, sf_dir):
     verification at the same >= threshold — so the composed pipeline, not
     just its pieces, is value-hash pinned. Catalog side-effects (metrics
     rows) go to a throwaway tmp dir."""
+    import atexit
+    import shutil
     import tempfile
 
     from .operators.curate import CurateConfig, curate_corpus
     from .sources.tables import Catalog
 
-    cat = Catalog(tempfile.mkdtemp(prefix="curate_entry_"))
+    root = tempfile.mkdtemp(prefix="curate_entry_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    cat = Catalog(root)
     curated, _ = curate_corpus(spark, _t(spark, sf_dir, "documents"), cat,
                                CurateConfig())
     return curated

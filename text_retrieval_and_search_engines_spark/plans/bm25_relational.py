@@ -158,8 +158,10 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, str]], k: int = 10,
     # The token array binds as its own projection first — referencing the
     # split expression from every output column would re-tokenize the row
     # once per column (no CSE across interpreted higher-order lambdas).
+    # a null text counts as no tokens: size(null) is -1, not NULL, once
+    # ANSI mode is off (spark.sql.legacy.sizeOfNull), skewing total_tokens
     stats = docs.select(words.alias("_w")).select(
-        F.size("_w").alias("_dl"),
+        F.size(F.coalesce("_w", F.array())).alias("_dl"),
         *[F.array_contains("_w", t).cast("int").alias(f"_p{i}")
           for i, t in enumerate(qterm_list)]
     ).agg(F.count("*").alias("n"), F.sum("_dl").alias("tot"),

@@ -11,15 +11,22 @@ Plan (search, search_terms and search_fast share it):
   queries --collect once, pinned analyzer on the driver--> [search_fast:
       (qid, term, weight); a repeated (qid, term) summed     no job]
   terms --reader.df_lookup memo--> df                      [0 jobs warm]
-  qt = local relation (pandas -> Arrow), n_qterms per qid  [no Python]
-  postings --term_bucket IN (driver list)-->               [static pruning]
-         --broadcast-join qt--> matched (qid x term chunks)
-  matched --repartition(qid, range_id) Arrow kernel-->     [ONE shuffle]
-      AQE sizes the scoring stage from the measured shuffle bytes;
-      decode chunks, accumulate float64 scores in lexicographic term order
-      (pinned summation order = oracle), local top-k
-  --window rank (score DESC, docid ASC) <= k-->            [tiny shuffle]
-      global top-k merge ("partition-parallel score-then-global-merge").
+  postings --term_bucket IN (driver list), term IN-->      [pruned scan]
+  placement: est = Σ df over the (qid, term) rows, known before any job
+  est <= DRIVER_SCORING_MAX_POSTINGS (2^19) — driver:
+      pruned postings --toArrow-->                         [ONE JVM job]
+      pyarrow join to qt, sort (qid, range_id, term), the scoring kernel,
+      number (score DESC, docid ASC) -> local relation     [no Python task]
+  above the bound — cluster:
+      qt = local relation (pandas -> Arrow), n_qterms per qid
+      --broadcast-join qt--> matched (qid x term chunks)
+      matched --repartition(qid, range_id) Arrow kernel--> [ONE shuffle]
+          AQE sizes the scoring stage from the measured shuffle bytes
+      --window rank (score DESC, docid ASC) <= k-->        [tiny shuffle]
+          global top-k merge ("partition-parallel score-then-global-merge")
+  The kernel (one generator, both placements): decode chunks, accumulate
+  float64 scores in lexicographic term order (pinned summation order =
+  oracle), tie-safe local top-k per (qid, range), merged per qid.
 
 Collection stats (N, avgdl, per-term df) travel as broadcast values; doc
 lengths ride inline in postings payloads — scoring never shuffles
@@ -44,6 +51,15 @@ K1_DEFAULT = 0.9   # reference src/config.py:53-55
 B_DEFAULT = 0.4
 
 SCORED_SCHEMA = "qid string, docid long, score double"
+RESULTS_SCHEMA = "qid string, docid long, score double, rank int"
+
+# Matched-posting count (Σ df over a search's query-term rows) at or below
+# which its scoring runs on the driver: one JVM job fetches the pruned
+# postings and the kernel scores them in-process. Above it, the cluster
+# placement spreads scoring over the executors. A constant, not a knob: the
+# crossover is measured in PLANS.md "BM25 query job", and it also caps the
+# driver's memory.
+DRIVER_SCORING_MAX_POSTINGS = 1 << 19
 
 
 @dataclass(frozen=True)
@@ -101,6 +117,8 @@ class IndexReader:
         # Snapshot semantics: tied to THIS reader — reopen the reader after
         # an append, exactly like reopening a Lucene searcher.
         self._df_cache: dict[str, int | None] = {}
+        # qids scored per placement ("driver" / "cluster", _score_and_merge)
+        self.placements: Counter = Counter()
 
     _DF_CACHE_MAX = 1_000_000
 
@@ -162,210 +180,163 @@ def tokenize_queries(queries: DataFrame, analyzer: str = "english"
     return queries.mapInPandas(kernel, schema="qid string, term string, weight double")
 
 
-def _score_and_merge(reader: IndexReader, qt: DataFrame, terms: list[str],
-                     params: SearchParams) -> DataFrame:
-    """Shared tail of every search plan: postings (pruned to the term
-    buckets of `terms`) x query-terms broadcast join -> per-(qid, range)
-    Arrow scoring kernel -> global top-k window. `qt` columns: qid, term,
-    weight, df, n_qterms; `terms` are its distinct terms."""
-    n_docs, avgdl = reader.n_docs, reader.avgdl
-    range_size = reader.range_size
-    k1, b, k, mode = params.k1, params.b, params.k, params.mode
+def _top_k(cand, scores, k: int):
+    """Tie-safe local top-k in the pinned (score DESC, id ASC) order; keeps
+    every candidate tied at the k-th score before the final truncate (a
+    bare argpartition[:k] could evict a smaller-docid tie — mirrors
+    bmw.py's >= theta trim)."""
+    if cand.size > k:
+        part = np.argpartition(-scores, k - 1)
+        kth = scores[part[k - 1]]
+        keep = part[scores[part] >= kth]
+        cand, scores = cand[keep], scores[keep]
+    sel = np.lexsort((cand, -scores))
+    cand, scores = cand[sel], scores[sel]
+    if cand.size > k:
+        cand, scores = cand[:k], scores[:k]
+    return cand, scores
 
-    extra = (["block_last", "block_max_tf", "block_min_dl",
-              "goff", "toff", "doff"] if params.algo == "bmw" else [])
-    postings = reader.postings
-    if reader.n_term_buckets:
-        # static partition pruning: only buckets holding the query terms
-        from .index_build import term_bucket
-        buckets = sorted({term_bucket(t, reader.n_term_buckets)
-                          for t in terms})
-        postings = postings.filter(F.col("term_bucket").isin(buckets))
-    matched = postings.join(F.broadcast(qt), "term", "inner").select(
-        "qid", "term", "weight", "df", "n_qterms", "range_id", "payload",
-        *extra)
 
-    if params.algo == "bmw":
-        from .bmw import bmw_topk_rows
+class _QidMerge:
+    """Per-qid merge of the (qid, range_id) groups' local top-k, shared by
+    both kernels. Rows arrive sorted by qid first, so all groups of one qid
+    are contiguous and a kernel emits ONE merged top-k per qid it holds
+    instead of one per (qid, range) — ~ranges/partitions fewer rows into
+    the global top-k."""
 
-        # Same mapInArrow group-walk shape as the exact path: rows sorted
-        # by (qid, range_id, term) in-task (no per-group argsort, no
-        # applyInPandas per-group materialization), one merged tie-safe
-        # top-k emitted per qid held by the task.
-        def bmw_kernel_arrow(batches):
-            import pyarrow as pa
-            import pyarrow.compute as pc
+    def __init__(self, k: int):
+        self.k, self.qid, self.parts, self.n_out = k, None, [], 0
+        self.out_q, self.out_d, self.out_s = [], [], []
 
-            group_rows: list = []
-            cur = None             # (qid, range_id) of the open group
-            qid_bufs: list = []
-            buf_qid = None
-            out_q: list = []
-            out_d: list = []
-            out_s: list = []
+    def add(self, qid, docids, scores) -> None:
+        """One group's local top-k (int64 docids, float64 scores)."""
+        if qid != self.qid:
+            self.flush()
+        if docids.size:
+            self.qid = qid
+            self.parts.append((docids, scores))
 
-            def trim(cand, scores):
-                if cand.size > k:
-                    part = np.argpartition(-scores, k - 1)
-                    kth = scores[part[k - 1]]
-                    keep = part[scores[part] >= kth]
-                    cand, scores = cand[keep], scores[keep]
-                sel = np.lexsort((cand, -scores))
-                cand, scores = cand[sel], scores[sel]
-                if cand.size > k:
-                    cand, scores = cand[:k], scores[:k]
-                return cand, scores
+    def flush(self) -> None:
+        if self.parts:
+            if len(self.parts) == 1:
+                d, s = self.parts[0]
+            else:
+                d, s = _top_k(np.concatenate([p[0] for p in self.parts]),
+                              np.concatenate([p[1] for p in self.parts]),
+                              self.k)
+            self.parts = []
+            self.out_q.append(np.repeat(self.qid, d.size))
+            self.out_d.append(d)
+            self.out_s.append(s)
+            self.n_out += d.size
+        self.qid = None
 
-            def flush_qid():
-                nonlocal buf_qid
-                if buf_qid is None or not qid_bufs:
-                    buf_qid = None
-                    return
-                if len(qid_bufs) == 1:
-                    d, s = qid_bufs[0]
-                else:
-                    d = np.concatenate([x[0] for x in qid_bufs])
-                    s = np.concatenate([x[1] for x in qid_bufs])
-                    d, s = trim(d, s)
-                qid_bufs.clear()
-                if d.size:
-                    out_q.append(np.repeat(buf_qid, d.size))
-                    out_d.append(d)
-                    out_s.append(s)
-                buf_qid = None
-
-            def finish():
-                nonlocal cur, buf_qid
-                if cur is None:
-                    return
-                qid, range_id = cur
-                d, s = bmw_topk_rows(group_rows, int(range_id) * range_size,
-                                     n_docs, avgdl, k1, b, k, mode)
-                group_rows.clear()
-                cur = None
-                if qid != buf_qid:
-                    flush_qid()
-                if d.size:
-                    buf_qid = qid
-                    qid_bufs.append((d, s))
-
-            # Columnar row walk (same pattern as the exact kernel below and
-            # the compaction kernel): scalars come out as numpy arrays, the
-            # six list columns as (flat values, row offsets) so each row's
-            # block metadata is a zero-copy numpy VIEW, and payload bytes
-            # stay an Arrow buffer — no per-row to_pylist dict that copies
-            # payloads and boxes every block-max entry (VERDICT r3 item 1).
-            def flat(col):
-                vals = col.flatten().to_numpy(zero_copy_only=False)
-                lens = pc.list_value_length(col).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                off = np.empty(lens.size + 1, dtype=np.int64)
-                off[0] = 0
-                np.cumsum(lens, out=off[1:])
-                return vals, off
-
-            for batch in batches:
-                idx = batch.schema.get_field_index
-                qids = batch.column(idx("qid")).to_numpy(zero_copy_only=False)
-                rids = batch.column(idx("range_id")).to_numpy()
-                wgts = batch.column(idx("weight")).to_numpy()
-                dfs = batch.column(idx("df")).to_numpy()
-                nqs = batch.column(idx("n_qterms")).to_numpy()
-                payloads = batch.column(idx("payload"))
-                bl_v, bl_o = flat(batch.column(idx("block_last")))
-                btf_v, btf_o = flat(batch.column(idx("block_max_tf")))
-                bdl_v, bdl_o = flat(batch.column(idx("block_min_dl")))
-                go_v, go_o = flat(batch.column(idx("goff")))
-                to_v, to_o = flat(batch.column(idx("toff")))
-                do_v, do_o = flat(batch.column(idx("doff")))
-                for i in range(len(qids)):
-                    key = (qids[i], int(rids[i]))
-                    if cur is not None and cur != key:
-                        finish()
-                    if cur is None:
-                        cur = key
-                    group_rows.append({
-                        "weight": wgts[i], "df": dfs[i],
-                        "n_qterms": nqs[i],
-                        "payload": payloads[i].as_buffer(),
-                        "block_last": bl_v[bl_o[i]:bl_o[i + 1]],
-                        "block_max_tf": btf_v[btf_o[i]:btf_o[i + 1]],
-                        "block_min_dl": bdl_v[bdl_o[i]:bdl_o[i + 1]],
-                        "goff": go_v[go_o[i]:go_o[i + 1]],
-                        "toff": to_v[to_o[i]:to_o[i + 1]],
-                        "doff": do_v[do_o[i]:do_o[i + 1]],
-                    })
-            finish()
-            flush_qid()
-            if out_q:
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(np.concatenate(out_q), type=pa.string()),
-                    pa.array(np.concatenate(out_d), type=pa.int64()),
-                    pa.array(np.concatenate(out_s), type=pa.float64()),
-                ], names=["qid", "docid", "score"])
-
-        return _rank_top_k(matched, bmw_kernel_arrow, k)
-
-    # Exhaustive scoring as a mapInArrow group-walk over rows sorted by
-    # (qid, range_id, term) — NOT applyInPandas, whose ~10 ms per-group
-    # pandas materialization dominates large query batches (500 q x ~15
-    # ranges = thousands of groups). The in-task sort also delivers the
-    # pinned lexicographic term summation order for free (terms are ASCII,
-    # so Spark's UTF8 binary sort == the oracle's python str order).
-    # The dense accumulators are allocated ONCE per task and reset by
-    # zeroing only the touched slots after each group.
-    def score_kernel_arrow(batches):
+    def drain(self, min_rows: int = 1):
+        """Yield the rows emitted so far as one SCORED_SCHEMA record batch,
+        once there are at least `min_rows` of them."""
         import pyarrow as pa
 
+        if self.n_out >= min_rows:
+            yield pa.RecordBatch.from_arrays([
+                pa.array(np.concatenate(self.out_q), type=pa.string()),
+                pa.array(np.concatenate(self.out_d), type=pa.int64()),
+                pa.array(np.concatenate(self.out_s), type=pa.float64()),
+            ], names=["qid", "docid", "score"])
+            self.out_q, self.out_d, self.out_s, self.n_out = [], [], [], 0
+
+
+def _scalar_columns(batch):
+    """The per-row inputs both kernels read: qid, range_id, weight, df and
+    n_qterms as numpy arrays, payload as its Arrow column."""
+    return (batch.column("qid").to_numpy(zero_copy_only=False),
+            *(batch.column(c).to_numpy()
+              for c in ("range_id", "weight", "df", "n_qterms")),
+            batch.column("payload"))
+
+
+def _bmw_kernel(n_docs: int, avgdl: float, range_size: int,
+                params: SearchParams):
+    from .bmw import bmw_topk_rows
+
+    k1, b, k, mode = params.k1, params.b, params.k, params.mode
+
+    # Same group walk as the exact kernel: rows sorted by (qid, range_id,
+    # term) (no per-group argsort, no applyInPandas per-group
+    # materialization), one merged tie-safe top-k emitted per qid.
+    def bmw_kernel_arrow(batches):
+        import pyarrow.compute as pc
+
+        group_rows: list = []
+        cur = None             # (qid, range_id) of the open group
+        merge = _QidMerge(k)
+
+        def finish():
+            nonlocal cur
+            if cur is None:
+                return
+            qid, range_id = cur
+            d, s = bmw_topk_rows(group_rows, int(range_id) * range_size,
+                                 n_docs, avgdl, k1, b, k, mode)
+            group_rows.clear()
+            cur = None
+            merge.add(qid, d, s)
+
+        # Columnar row walk (same pattern as the exact kernel below and
+        # the compaction kernel): scalars come out as numpy arrays, the
+        # six list columns as (flat values, row offsets) so each row's
+        # block metadata is a zero-copy numpy VIEW, and payload bytes
+        # stay an Arrow buffer — no per-row to_pylist dict that copies
+        # payloads and boxes every block-max entry (VERDICT r3 item 1).
+        def flat(col):
+            vals = col.flatten().to_numpy(zero_copy_only=False)
+            lens = pc.list_value_length(col).to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            off = np.empty(lens.size + 1, dtype=np.int64)
+            off[0] = 0
+            np.cumsum(lens, out=off[1:])
+            return vals, off
+
+        for batch in batches:
+            qids, rids, wgts, dfs, nqs, payloads = _scalar_columns(batch)
+            lists = [(c, *flat(batch.column(c))) for c in BMW_COLUMNS]
+            for i in range(len(qids)):
+                key = (qids[i], int(rids[i]))
+                if cur is not None and cur != key:
+                    finish()
+                if cur is None:
+                    cur = key
+                row = {"weight": wgts[i], "df": dfs[i], "n_qterms": nqs[i],
+                       "payload": payloads[i].as_buffer()}
+                for c, vals, off in lists:
+                    row[c] = vals[off[i]:off[i + 1]]
+                group_rows.append(row)
+        finish()
+        merge.flush()
+        yield from merge.drain()
+
+    return bmw_kernel_arrow
+
+
+def _exact_kernel(n_docs: int, avgdl: float, range_size: int,
+                  params: SearchParams):
+    k1, b, k, mode = params.k1, params.b, params.k, params.mode
+
+    # Exhaustive scoring as a group-walk over rows sorted by (qid,
+    # range_id, term) — NOT applyInPandas, whose ~10 ms per-group pandas
+    # materialization dominates large query batches (500 q x ~15 ranges =
+    # thousands of groups). The sort also delivers the pinned lexicographic
+    # term summation order for free (terms are ASCII, so Spark's UTF8
+    # binary sort == Arrow's byte sort == the oracle's python str order).
+    # The dense accumulators are allocated ONCE per call and reset by
+    # zeroing only the touched slots after each group.
+    def score_kernel_arrow(batches):
         acc = np.zeros(range_size, dtype=np.float64)
         hits = np.zeros(range_size, dtype=np.int32)
         cur = None            # (qid, range_id, n_qterms) of the open group
-        # per-qid candidate buffers: all groups of one qid are CONTIGUOUS in
-        # the task (rows sorted by qid first), so the task emits ONE merged
-        # top-k per qid it holds instead of one per (qid, range) — ~ranges/
-        # partitions fewer rows into the global top-k exchange
-        qid_bufs: list = []   # [(docids, scores), ...] for buf_qid
-        buf_qid = None
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-
-        def trim(cand, scores, offset=0):
-            """Tie-safe local top-k in the pinned (score DESC, id ASC)
-            order; keeps every candidate tied at the k-th score before the
-            final truncate (a bare argpartition[:k] could evict a
-            smaller-docid tie — mirrors bmw.py's >= theta trim)."""
-            if cand.size > k:
-                part = np.argpartition(-scores, k - 1)
-                kth = scores[part[k - 1]]
-                keep = part[scores[part] >= kth]
-                cand, scores = cand[keep], scores[keep]
-            sel = np.lexsort((cand, -scores))
-            cand, scores = cand[sel], scores[sel]
-            if cand.size > k:
-                cand, scores = cand[:k], scores[:k]
-            return cand, scores
-
-        def flush_qid():
-            nonlocal buf_qid
-            if buf_qid is None or not qid_bufs:
-                buf_qid = None
-                return
-            if len(qid_bufs) == 1:
-                d, s = qid_bufs[0]
-            else:
-                d = np.concatenate([b[0] for b in qid_bufs])
-                s = np.concatenate([b[1] for b in qid_bufs])
-                d, s = trim(d, s)
-            qid_bufs.clear()
-            if d.size:
-                out_q.append(np.repeat(buf_qid, d.size))
-                out_d.append(d)
-                out_s.append(s)
-            buf_qid = None
+        merge = _QidMerge(k)
 
         def finish():
-            nonlocal cur, buf_qid
+            nonlocal cur
             if cur is None:
                 return
             qid, range_id, n_qterms = cur
@@ -380,30 +351,11 @@ def _score_and_merge(reader: IndexReader, qt: DataFrame, terms: list[str],
             acc[nz] = 0.0
             hits[nz] = 0
             cur = None
-            cand, scores = trim(cand, scores)
-            if qid != buf_qid:
-                flush_qid()
-            if cand.size:
-                buf_qid = qid
-                qid_bufs.append(((cand + base).astype(np.int64), scores))
-
-        def drain():
-            batch = pa.RecordBatch.from_arrays([
-                pa.array(np.concatenate(out_q), type=pa.string()),
-                pa.array(np.concatenate(out_d), type=pa.int64()),
-                pa.array(np.concatenate(out_s), type=pa.float64()),
-            ], names=["qid", "docid", "score"])
-            out_q.clear(), out_d.clear(), out_s.clear()
-            return batch
+            cand, scores = _top_k(cand, scores, k)
+            merge.add(qid, (cand + base).astype(np.int64), scores)
 
         for batch in batches:
-            idx = batch.schema.get_field_index
-            qids = batch.column(idx("qid")).to_numpy(zero_copy_only=False)
-            rids = batch.column(idx("range_id")).to_numpy()
-            wgts = batch.column(idx("weight")).to_numpy()
-            dfs = batch.column(idx("df")).to_numpy()
-            nqs = batch.column(idx("n_qterms")).to_numpy()
-            payloads = batch.column(idx("payload"))
+            qids, rids, wgts, dfs, nqs, payloads = _scalar_columns(batch)
             for i in range(len(qids)):
                 key = (qids[i], int(rids[i]), int(nqs[i]))
                 if cur is not None and cur != key:
@@ -422,22 +374,95 @@ def _score_and_merge(reader: IndexReader, qt: DataFrame, terms: list[str],
                 loc = docids - base
                 acc[loc] += s
                 hits[loc] += 1
-            if out_q and sum(a.size for a in out_d) >= 500_000:
-                yield drain()
+            yield from merge.drain(500_000)
         finish()
-        flush_qid()
-        if out_q:
-            yield drain()
+        merge.flush()
+        yield from merge.drain()
 
-    return _rank_top_k(matched, score_kernel_arrow, k)
+    return score_kernel_arrow
+
+
+BMW_COLUMNS = ["block_last", "block_max_tf", "block_min_dl",
+               "goff", "toff", "doff"]
+
+
+def _query_postings(reader: IndexReader, terms: list[str], algo: str
+                    ) -> DataFrame:
+    """The postings rows of `terms`, pruned before the scan — static
+    term_bucket partition pruning (a driver-side bucket list) and a pushed
+    `term IN` — with only the columns a kernel reads. Both placements read
+    this one frame."""
+    postings = reader.postings
+    if reader.n_term_buckets:
+        from .index_build import term_bucket
+        buckets = sorted({term_bucket(t, reader.n_term_buckets)
+                          for t in terms})
+        postings = postings.filter(F.col("term_bucket").isin(buckets))
+    return postings.filter(F.col("term").isin(terms)).select(
+        "term", "range_id", "payload",
+        *(BMW_COLUMNS if algo == "bmw" else []))
+
+
+def _score_and_merge(reader: IndexReader, qt: pd.DataFrame,
+                     params: SearchParams) -> DataFrame:
+    """Shared tail of every search plan (module docstring): the placement
+    comes from est = Σ df over the query-term rows, known before any job
+    runs, and is counted per qid in `reader.placements`. Both placements
+    run one kernel generator over rows in one (qid, range_id, term) order,
+    so their scores are bit-identical. `qt` columns: qid, term, weight, df,
+    n_qterms."""
+    make = _bmw_kernel if params.algo == "bmw" else _exact_kernel
+    kernel = make(reader.n_docs, reader.avgdl, reader.range_size, params)
+    postings = _query_postings(reader, sorted(set(qt["term"])), params.algo)
+    n_qids = qt["qid"].nunique()
+    if int(qt["df"].sum()) <= DRIVER_SCORING_MAX_POSTINGS:
+        reader.placements["driver"] += n_qids
+        return _rank_on_driver(reader.spark, postings, qt, kernel)
+    reader.placements["cluster"] += n_qids
+    matched = postings.join(
+        F.broadcast(reader.spark.createDataFrame(qt, QT_SCHEMA)), "term")
+    return _rank_top_k(matched, kernel, params.k)
+
+
+def _rank_on_driver(spark: SparkSession, postings: DataFrame,
+                    qt: pd.DataFrame, kernel) -> DataFrame:
+    """The driver placement: ONE JVM job (`toArrow`) fetches the pruned
+    postings; the join to `qt`, the cluster stage's (qid, range_id, term)
+    order, the kernel (it emits each qid once, cut to k) and the
+    (score DESC, docid ASC) numbering run in-process. The result is a
+    local relation: reading it runs no job."""
+    import pyarrow as pa
+
+    post = postings.toArrow()
+    post = post.append_column(
+        "_row", pa.array(np.arange(post.num_rows, dtype=np.int64)))
+    keys = post.select(["term", "range_id", "_row"]).join(
+        pa.Table.from_pandas(qt, preserve_index=False), "term").sort_by(
+        [("qid", "ascending"), ("range_id", "ascending"),
+         ("term", "ascending"), ("_row", "ascending")])
+    matched = post.take(keys["_row"])
+    for c in ("qid", "weight", "df", "n_qterms"):
+        matched = matched.append_column(c, keys[c])
+    scored = pa.Table.from_batches(
+        list(kernel(matched.to_batches())),
+        schema=pa.schema([("qid", pa.string()), ("docid", pa.int64()),
+                          ("score", pa.float64())])).sort_by(
+        [("qid", "ascending"), ("score", "descending"),
+         ("docid", "ascending")])
+    qids = scored["qid"].to_numpy(zero_copy_only=False)
+    pos = np.arange(qids.size)
+    first = np.maximum.accumulate(
+        np.where(np.r_[True, qids[1:] != qids[:-1]], pos, 0))
+    return spark.createDataFrame(
+        scored.append_column("rank", pa.array(pos - first + 1, pa.int32())),
+        RESULTS_SCHEMA)
 
 
 def _rank_top_k(matched: DataFrame, kernel, k: int) -> DataFrame:
-    """Scoring stage + global merge shared by both kernels. The exchange
+    """Scoring stage + global merge of the cluster placement. The exchange
     carries no explicit partition count: AQE coalesces the post-shuffle
-    partitions from the shuffle bytes it measures, so a single query's few
-    matched rows score in one task while a large batch still spreads over
-    the cores."""
+    partitions from the shuffle bytes it measures, so a few matched rows
+    score in one task while a large batch still spreads over the cores."""
     scored = (matched
               .repartition("qid", "range_id")
               .sortWithinPartitions("qid", "range_id", "term")
@@ -463,8 +488,8 @@ def _search_weighted(reader: IndexReader, rows, params: SearchParams
     Spark jobs when warm); unmatched terms drop out, and n_qterms is each
     qid's number of distinct matched terms — conjunctive mode needs that
     GLOBAL count, since a term absent from one docid range still vetoes
-    its docs. The query side reaches the JVM as a local relation (pandas
-    -> Arrow), not a Python RDD."""
+    its docs. The query side stays a driver-side table: a local relation
+    (pandas -> Arrow) in the cluster placement, not a Python RDD."""
     weights: dict[tuple[str, str], float] = {}
     for qid, term, w in rows:
         weights[qid, term] = weights.get((qid, term), 0.0) + w
@@ -476,9 +501,7 @@ def _search_weighted(reader: IndexReader, rows, params: SearchParams
     n_q = Counter(q for q, _, _, _ in matched)
     qt = pd.DataFrame([(q, t, w, df, n_q[q]) for q, t, w, df in matched],
                       columns=["qid", "term", "weight", "df", "n_qterms"])
-    return _score_and_merge(reader,
-                            reader.spark.createDataFrame(qt, QT_SCHEMA),
-                            sorted(set(qt["term"])), params)
+    return _score_and_merge(reader, qt, params)
 
 
 def search_terms(reader: IndexReader, qterms: DataFrame,
@@ -517,8 +540,7 @@ def search_fast(reader: IndexReader, queries: list[tuple[str, str]],
 
 
 def _empty_results(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [], "qid string, docid long, score double, rank int")
+    return spark.createDataFrame([], RESULTS_SCHEMA)
 
 
 def attach_urls(reader: IndexReader, results: DataFrame) -> DataFrame:
